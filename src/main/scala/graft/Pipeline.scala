@@ -233,8 +233,10 @@ object Pipeline {
     *      against the standing indexes under `indexRoot`
     *      ([[Dedup.nearDupAgainstIndex]],
     *      [[Dedup.hammingCandidatesAgainstIndex]]) — index-side
-    *      signatures are NOT recomputed; probe IO is ∝ the batch's
-    *      bucket footprint. Docs in any duplicate cluster keep only
+    *      signatures are NOT recomputed; probe IO — file discovery
+    *      as well as the scan ([[Dedup.probedBuckets]]) — is ∝ the
+    *      batch's bucket footprint (a batch naming every bucket still
+    *      lists them all). Docs in any duplicate cluster keep only
     *      the cluster's canonical (min id — always the INDEXED doc
     *      for cross pairs, because ids are monotone across batches);
     *      then the survivors' texts are substring-deduplicated against

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * measure first; §1.2: find the passes to remove).
   *
   * Usage: `runMain graft.Trace <query...>`. Data dir from
-  * `SPARK_GRAFT_SF_DIR`, core count from `SPARK_GRAFT_CPUS` —
-  * no machine-local paths baked in.
+  * `SPARK_GRAFT_SF_DIR` (by default the local sf0.1 testdata directory,
+  * as in [[Bench]]), core count from `SPARK_GRAFT_CPUS`.
   */
 object Trace {
   def main(args: Array[String]): Unit = {

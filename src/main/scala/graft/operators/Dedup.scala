@@ -632,22 +632,22 @@ object Dedup {
   }
 
   private[graft] def readContainmentIndexParams(spark: SparkSession,
-      dir: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("num_shingle_words"), r.getAs[Int]("posting_buckets"))
-  }
+      dir: String): (Int, Int) =
+    readContainmentParamsAndLayout(spark, dir)._1
 
   /** ONE params/ read for the containment probes — the
-    * [[readMinhashParamsAndLayout]] role for this family. */
+    * [[readMinhashParamsAndLayout]] role for this family, cached the
+    * same way. */
   private def readContainmentParamsAndLayout(spark: SparkSession,
-      dir: String): ((Int, Int), Option[Int]) = {
-    val df = spark.read.parquet(s"$dir/params")
-    val hasSb = df.schema.fieldNames.contains("shingle_buckets")
-    val r = df.head()
-    ((r.getAs[Int]("num_shingle_words"),
-      r.getAs[Int]("posting_buckets")),
-      if (hasSb) Some(r.getAs[Int]("shingle_buckets")) else None)
-  }
+      dir: String): ((Int, Int), Option[Int]) =
+    IndexMeta.cached(spark, "containment-params", dir) {
+      val df = spark.read.parquet(s"$dir/params")
+      val hasSb = df.schema.fieldNames.contains("shingle_buckets")
+      val r = df.head()
+      ((r.getAs[Int]("num_shingle_words"),
+        r.getAs[Int]("posting_buckets")),
+        if (hasSb) Some(r.getAs[Int]("shingle_buckets")) else None)
+    }
 
   /** Candidate containment pairs TOUCHING a new batch — within-batch
     * and batch-vs-indexed in one pass, because the df cut is a GLOBAL
@@ -697,34 +697,36 @@ object Dedup {
       minHits: Int, broadcastProbe: Boolean): DataFrame = {
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
     val (nsw, buckets) = params
-    val newPost = shingleHashArrays(newDocs, nsw)
+    // the batch's postings, materialized once: the bucket list, the
+    // probe join and the union below all read this copy
+    val newPost = Barriers.barrier(shingleHashArrays(newDocs, nsw)
       .where(size(col("sh")) > 0)
       .select(col("doc_id"), size(col("sh")).as("n"),
-        explode(col("sh")).as("h"))
-    val hashProbe0 = newPost.select(
+        explode(col("sh")).as("h")))
+    val hashKeys = newPost.select(
         pmod(col("h"), lit(buckets.toLong)).cast("int").as("bucket"),
         col("h"))
       .distinct()
-      // vacuously-true binary comparison marking the probe side
-      // likely-selective so dynamic partition pruning fires
-      .where(col("h") >= lit(Long.MinValue))
+    // vacuously-true binary comparison marking the probe side
+    // likely-selective so dynamic partition pruning fires
+    val hashProbe0 = hashKeys.where(col("h") >= lit(Long.MinValue))
     val hashProbe = if (broadcastProbe) broadcast(hashProbe0)
       else hashProbe0
-    val idxPost = spark.read.schema(postingsSchema)
-      .parquet(s"$dir/postings")
+    val idxPost = probedBuckets(spark, s"$dir/postings",
+        Some(postingsSchema), hashKeys)
       .join(hashProbe, Seq("bucket", "h"), "left_semi")
       // retried appends may hold a (doc, h) row twice; hit counting
       // must see it once
       .dropDuplicates("doc_id", "h")
-    // deliberately LAZY throughout (no barrier, unlike the inline
-    // [[containmentCandidates]]): the returned plan keeps the
-    // DPP-pruned scan visible (PlanSpec pins it), at the price of the
-    // self-join below evaluating the union subtree more than once —
-    // bounded, because every re-evaluation is the BATCH-footprint
-    // pruned scan, never the corpus-scale pass the inline version
-    // barriers against. Callers that consume the candidates twice
-    // materialize once themselves ([[containmentPairsAgainstIndex]]'s
-    // candidates barrier).
+    // deliberately LAZY past the batch's postings (no barrier on the
+    // union, unlike the inline [[containmentCandidates]]): the returned
+    // plan keeps the DPP-pruned scan visible (PlanSpec pins it), at the
+    // price of the self-join below evaluating the union subtree more
+    // than once — bounded, because every re-evaluation is the
+    // BATCH-footprint pruned scan, never the corpus-scale pass the
+    // inline version barriers against. Callers that consume the
+    // candidates twice materialize once themselves
+    // ([[containmentPairsAgainstIndex]]'s candidates barrier).
     val union = idxPost.select(col("doc_id"), col("n"), col("h"),
         lit(false).as("__new"))
       .unionByName(newPost.select(col("doc_id"), col("n"), col("h"),
@@ -1108,13 +1110,16 @@ object Dedup {
   }
 
   // private[graft]: the streaming bridge appends each micro-batch
-  // under the index's own stored chunking rule and granularity
+  // under the index's own stored chunking rule and granularity. Cached
+  // on the params/ stamp ([[IndexMeta.cached]]): every append rewrites
+  // params/ with the new max_doc_id watermark, re-stamping it
   private[graft] def readChunkIndexParams(spark: SparkSession,
-      dir: String): (String, Int, Int, Long) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[String]("rule"), r.getAs[Int]("granularity"),
-      r.getAs[Int]("chunk_buckets"), r.getAs[Long]("max_doc_id"))
-  }
+      dir: String): (String, Int, Int, Long) =
+    IndexMeta.cached(spark, "chunk-params", dir) {
+      val r = spark.read.parquet(s"$dir/params").head()
+      (r.getAs[String]("rule"), r.getAs[Int]("granularity"),
+        r.getAs[Int]("chunk_buckets"), r.getAs[Long]("max_doc_id"))
+    }
 
   /** Incremental chunk-level substring dedup of a NEW batch against a
     * [[writeChunkIndex]] corpus: the batch is chunked under the INDEX's
@@ -1158,15 +1163,18 @@ object Dedup {
         s"$maxId — the incremental ≡ full-run equality needs monotone " +
         "ids (index the lower-id batch first, or renumber)")
     val base = chunkBaseFor(newDocs, rule, granularity)
-    val probe0 = base.select(explode(col("chunks")).as("chunk"))
-      .select(md5(col("chunk")).as("ch"))
-      .distinct()
-      .withColumn("bucket",
-        pmod(xxhash64(col("ch")), lit(buckets.toLong)).cast("int"))
-      // vacuously-true comparison (md5 is always 32 chars) marking the
-      // probe side likely-selective so dynamic partition pruning fires —
-      // the [[minhashCandidatesAgainstIndex]] predicate trick
-      .where(length(col("ch")) > 0)
+    // the batch's distinct chunk keys, materialized once: the bucket
+    // list and the probe join both read this copy
+    val keys = Barriers.barrier(
+      base.select(explode(col("chunks")).as("chunk"))
+        .select(md5(col("chunk")).as("ch"))
+        .distinct()
+        .withColumn("bucket",
+          pmod(xxhash64(col("ch")), lit(buckets.toLong)).cast("int")))
+    // vacuously-true comparison (md5 is always 32 chars) marking the
+    // probe side likely-selective so dynamic partition pruning fires —
+    // the [[minhashCandidatesAgainstIndex]] predicate trick
+    val probe0 = keys.where(length(col("ch")) > 0)
     // broadcastProbe = false for a batch too large to broadcast: the
     // semi-join degrades to a hash shuffle keyed on (bucket, ch) —
     // still ∝ batch + matching index rows — at the cost of the pruned
@@ -1176,7 +1184,8 @@ object Dedup {
     // documented price), and without the collapse a boilerplate chunk
     // present in N appended batches would put N rows per probe into the
     // anti-join's build side
-    val hits = spark.read.schema(chunksSchema).parquet(s"$dir/chunks")
+    val hits = probedBuckets(spark, s"$dir/chunks", Some(chunksSchema),
+        keys)
       .join(probe, Seq("bucket", "ch"), "left_semi")
       .select(col("ch")).distinct()
     chunkDedupTail(base, Some(hits), sep = chunkSepFor(rule))
@@ -1290,10 +1299,11 @@ object Dedup {
   // private[graft]: the streaming bridge reads the stored radius/bucket
   // params so its probe and append run under the index's own geometry
   private[graft] def readHammingIndexParams(spark: SparkSession,
-      dir: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("max_hamming"), r.getAs[Int]("piece_buckets"))
-  }
+      dir: String): (Int, Int) =
+    IndexMeta.cached(spark, "hamming-params", dir) {
+      val r = spark.read.parquet(s"$dir/params").head()
+      (r.getAs[Int]("max_hamming"), r.getAs[Int]("piece_buckets"))
+    }
 
   /** The pigeonhole piece rows of a positional (id, signature) table at
     * radius `maxHamming`: (doc_id, q, qh, simhash), one row per piece —
@@ -1348,19 +1358,21 @@ object Dedup {
       s"probe radius $radius exceeds the index's pigeonhole radius " +
         s"$indexed — pairs beyond it would be silently missed; " +
         "re-index at the larger radius instead")
-    val newPieces = signaturePieces(newSigs, indexed)
+    // the batch's pieces, materialized once: the bucket list and the
+    // probe join both read this copy
+    val keys = Barriers.barrier(signaturePieces(newSigs, indexed)
       .withColumn("bucket",
         pmod(col("qh"), lit(buckets.toLong)).cast("int"))
       .withColumnRenamed("doc_id", "new_id")
-      .withColumnRenamed("simhash", "new_sig")
-      // vacuously-true comparison marking the probe likely-selective so
-      // dynamic partition pruning fires (the minhash-probe trick)
-      .where(col("q") >= 0)
+      .withColumnRenamed("simhash", "new_sig"))
+    // vacuously-true comparison marking the probe likely-selective so
+    // dynamic partition pruning fires (the minhash-probe trick)
+    val newPieces = keys.where(col("q") >= 0)
     // broadcastProbe = false for a batch too large to broadcast — the
     // same shuffle degradation as the sibling probes
     val probe =
       if (broadcastProbe) broadcast(newPieces) else newPieces
-    spark.read.schema(piecesSchema).parquet(s"$dir/pieces")
+    probedBuckets(spark, s"$dir/pieces", Some(piecesSchema), keys)
       .join(probe, Seq("bucket", "q", "qh"))
       .where(col("doc_id") =!= col("new_id"))
       .select(least(col("doc_id"), col("new_id")).as("id_a"),
@@ -1625,6 +1637,69 @@ object Dedup {
     StructField("doc_id", LongType), StructField("n", IntegerType),
     StructField("h", LongType), StructField("bucket", IntegerType)))
 
+  /** The ONE way an against-index probe opens a bucket-partitioned
+    * index dataset: only the partition directories the probe names are
+    * listed and read, so file DISCOVERY, not just the scan, is ∝ the
+    * probe's bucket footprint.
+    *
+    * `spark.read.parquet(root)` discovers partitions by listing every
+    * `bucket=` directory under `root`, and past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) it
+    * does so with a distributed job of one task per directory — a
+    * 256-task job on every one-document lookup against the default band
+    * buckets, before the dynamically pruned scan reads its few files.
+    * Here the driver lists `root` once (one Hadoop `listStatus`), keeps
+    * the `<part>=<int>` directories whose value the probe's `keys` name,
+    * and reads exactly those with `basePath = root`: `part` stays a
+    * partition column, so the probe join's dynamic partition pruning
+    * filter still plants. Entries that are not `<part>=<int>`
+    * directories (`_LEASE`, `_temporary`, `params`, stray files) are
+    * never read as buckets. No named bucket on disk → an empty frame of
+    * the same schema. A probe naming more than the threshold's count of
+    * directories still lists them with Spark's parallel job, as the
+    * whole-root read did.
+    *
+    * `keys` (any frame with an int `part` column) is read twice — here
+    * for its distinct values and again by the caller's join — so
+    * callers pass MATERIALIZED key rows ([[Barriers.barrier]], or a
+    * cheap projection of one) and plant their DPP marker predicate
+    * AFTER the barrier, where the pruning rule can see it. `schema`
+    * None infers the columns from the named directories (the IVF
+    * `cells/` layout, which carries whatever columns the corpus had). A
+    * missing root, or an inferred schema with nothing on disk, reads
+    * the root as before, failing the way a whole-root read fails.
+    */
+  private[operators] def probedBuckets(spark: SparkSession, root: String,
+      schema: Option[StructType], keys: DataFrame,
+      part: String = "bucket"): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def reader(base: Boolean) = {
+      val r = schema.fold(spark.read)(spark.read.schema)
+      if (base) r.option("basePath", root) else r
+    }
+    val prefix = s"$part="
+    val rootExists = fs.exists(rootPath)
+    val onDisk: Map[Int, String] =
+      if (!rootExists) Map.empty
+      else fs.listStatus(rootPath).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+        .flatMap(s => s.getPath.getName.drop(prefix.length).toIntOption
+          .map(_ -> s.getPath.toString))
+        .toMap
+    val paths = keys.select(col(part)).distinct().collect()
+      .filterNot(_.isNullAt(0)).flatMap(r => onDisk.get(r.getInt(0)))
+      .sorted
+    if (paths.nonEmpty) reader(base = true).parquet(paths.toSeq: _*)
+    else (schema, onDisk.values.headOption) match {
+      case (Some(s), _) if rootExists => spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
+      case (None, Some(p)) => reader(base = true).parquet(p).where(lit(false))
+      case _ => reader(base = false).parquet(root)
+    }
+  }
+
   /** The shingles/ partition expression: doc-id hash buckets, INT like
     * every other index partition column (a cast on the partition
     * attribute defeats dynamic partition pruning — see
@@ -1708,19 +1783,21 @@ object Dedup {
     * candidates — the bands/ probe economics applied to the verify
     * side); the legacy flat layout keeps its full-scan semi-join.
     * `buckets` is the caller's already-read layout — the probe
-    * surfaces read params/ exactly once per call. */
+    * surfaces read params/ exactly once per call. `involved` derives
+    * from the caller's barrier'd candidates, so the bucket list and the
+    * join below both read that materialized copy. */
   private def prunedIndexShingles(spark: SparkSession, dir: String,
       involved: DataFrame, buckets: Option[Int]): DataFrame =
     buckets match {
       case Some(n) =>
-        val probe = involved
+        val keys = involved
           .withColumn("bucket", shingleBucket(n)(col("doc_id")))
-          // vacuously-true binary comparison marking the probe side
-          // likely-selective so dynamic partition pruning fires (the
-          // bands/ probe's device)
-          .where(col("doc_id") >= lit(Long.MinValue))
-        spark.read.schema(bucketedShinglesSchema)
-          .parquet(s"$dir/shingles")
+        // vacuously-true binary comparison marking the probe side
+        // likely-selective so dynamic partition pruning fires (the
+        // bands/ probe's device)
+        val probe = keys.where(col("doc_id") >= lit(Long.MinValue))
+        probedBuckets(spark, s"$dir/shingles",
+            Some(bucketedShinglesSchema), keys)
           .join(broadcast(probe), Seq("bucket", "doc_id"), "left_semi")
           .select(col("doc_id"), col("sh"))
       case None => spark.read.schema(shinglesSchema)
@@ -1765,15 +1842,18 @@ object Dedup {
     * the contract every pair surface here already assumes.
     *
     * SIZING `bandBuckets` — when does the pruned probe pay? A probe
-    * scan partition-prunes to the batch's DISTINCT band buckets, so
-    * pruning pays exactly when `batch docs × bands` (the batch's band
-    * rows, each naming one bucket) is comfortably below `bandBuckets`;
-    * past that point every bucket is named and the probe reads the
-    * whole index once regardless. Measured at sf1
-    * (docs/BENCH_SF1.md, round-9 appendix): a 520-doc batch × 8 bands
-    * hits all 256 default buckets — zero pruning, the 6.7 s probe is
-    * still 1.7× under the full re-run purely on compute, and a
-    * 10×-smaller batch (or `bandBuckets = 4096`) reads
+    * lists and scans only the batch's DISTINCT band buckets
+    * ([[probedBuckets]]: file discovery, not just the scan, is ∝ the
+    * named buckets — a one-document lookup lists 8 directories, not
+    * 256), so pruning pays exactly when `batch docs × bands` (the
+    * batch's band rows, each naming one bucket) is comfortably below
+    * `bandBuckets`; past that point every bucket is named and the probe
+    * lists and reads the whole index once regardless (more than 32
+    * named directories are listed by Spark's parallel listing job).
+    * Measured at sf1 (docs/BENCH_SF1.md, round-9 appendix): a 520-doc
+    * batch × 8 bands hits all 256 default buckets — zero pruning, the
+    * 6.7 s probe is still 1.7× under the full re-run purely on compute,
+    * and a 10×-smaller batch (or `bandBuckets = 4096`) reads
     * proportionally less. The ceiling: each append lays up to one
     * file per named bucket, so buckets far above the per-batch band
     * count buy pruning at small-file-write cost ([[compactIndex]]
@@ -1840,24 +1920,23 @@ object Dedup {
   // private[graft]: the streaming bridge appends each micro-batch's
   // survivors under the index's own stored signature params
   private[graft] def readMinhashIndexParams(spark: SparkSession,
-      dir: String): (Int, Int, Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("num_shingle_words"), r.getAs[Int]("num_hashes"),
-      r.getAs[Int]("bands"), r.getAs[Int]("band_buckets"))
-  }
+      dir: String): (Int, Int, Int, Int) =
+    readMinhashParamsAndLayout(spark, dir)._1
 
   /** ONE params/ read serving both the signature tuple and the
-    * shingles/ layout — each probe surface pays a single driver-side
-    * parquet job for its metadata instead of one per field group. */
+    * shingles/ layout, cached per JVM on the params/ stamp
+    * ([[IndexMeta.cached]]) — a repeated probe runs no params job, and
+    * an append (which rewrites params/) re-stamps the entry. */
   private def readMinhashParamsAndLayout(spark: SparkSession,
-      dir: String): ((Int, Int, Int, Int), Option[Int]) = {
-    val df = spark.read.parquet(s"$dir/params")
-    val hasSb = df.schema.fieldNames.contains("shingle_buckets")
-    val r = df.head()
-    ((r.getAs[Int]("num_shingle_words"), r.getAs[Int]("num_hashes"),
-      r.getAs[Int]("bands"), r.getAs[Int]("band_buckets")),
-      if (hasSb) Some(r.getAs[Int]("shingle_buckets")) else None)
-  }
+      dir: String): ((Int, Int, Int, Int), Option[Int]) =
+    IndexMeta.cached(spark, "minhash-params", dir) {
+      val df = spark.read.parquet(s"$dir/params")
+      val hasSb = df.schema.fieldNames.contains("shingle_buckets")
+      val r = df.head()
+      ((r.getAs[Int]("num_shingle_words"), r.getAs[Int]("num_hashes"),
+        r.getAs[Int]("bands"), r.getAs[Int]("band_buckets")),
+        if (hasSb) Some(r.getAs[Int]("shingle_buckets")) else None)
+    }
 
   /** Candidate near-dup pairs between a NEW batch and the indexed corpus:
     * the batch's bands (map-only, computed with the INDEX's own stored
@@ -1900,20 +1979,16 @@ object Dedup {
   private def minhashCandidatesAgainstIndexWith(spark: SparkSession,
       newDocs: DataFrame, dir: String, params: (Int, Int, Int, Int),
       broadcastProbe: Boolean, maxBandFreq: Long = 0L): DataFrame = {
-    val (nsw, nh, nb, buckets) = params
-    val newBands = lshBands(newDocs, nsw, nh, nb)
-      // int, matching the inferred partition column type — see
-      // [[writeMinhashIndex]]'s bucket comment (a cast on the partition
-      // attribute would defeat partition pruning)
-      .withColumn("bucket",
-        pmod(col("band_hash"), lit(buckets.toLong)).cast("int"))
+    val newBands = probeBands(newDocs, params)
       .withColumnRenamed("doc_id", "new_id")
+    val bands = probedBuckets(spark, s"$dir/bands", Some(bandsSchema),
+      newBands)
     // the band_id >= 0 predicate is vacuously true (posexplode
     // positions) but load-bearing: Spark's PartitionPruning rule only
     // plants a dynamic pruning subquery when the filtering side carries
     // a likely-SELECTIVE predicate (a binary comparison — IsNotNull does
     // not qualify), and the probe side IS selective by contract (batch ≪
-    // index); without it the bands/ scan reads every bucket partition
+    // index); without it the bands/ scan reads every named bucket
     val probe =
       if (broadcastProbe) broadcast(newBands.where(col("band_id") >= 0))
       else newBands
@@ -1921,7 +1996,7 @@ object Dedup {
       if (maxBandFreq <= 0L)
         // cap off: the bands/ scan flows straight into the pair join —
         // the single-join plan every existing probe pins (q32/q89)
-        spark.read.schema(bandsSchema).parquet(s"$dir/bands")
+        bands
       else {
         // cap on: materialize the PRUNED matched rows once (the df
         // aggregate and the pair join both read them — without the
@@ -1929,7 +2004,7 @@ object Dedup {
         // The count is index-side df restricted to the probed keys —
         // ∝ matches, rows already in hand, never the index.
         val m = Barriers.barrier(
-          matchedIndexBands(spark, dir, probe, broadcastProbe))
+          matchedIndexBands(bands, probe, broadcastProbe))
         m.join(
           m.groupBy(col("bucket"), col("band_id"), col("band_hash"))
             .agg(count(lit(1)).as("df"))
@@ -1947,15 +2022,30 @@ object Dedup {
       .distinct()
   }
 
-  /** The `bands/` rows matching a probe's band keys — the pruned scan
-    * every against-index candidate surface starts from. */
-  private def matchedIndexBands(spark: SparkSession, dir: String,
-      probe: DataFrame, broadcastProbe: Boolean): DataFrame = {
+  /** A batch's band rows under the index's stored `params`, with the
+    * `bands/` partition bucket, MATERIALIZED once: the probe's bucket
+    * list ([[probedBuckets]]) and its join both read this copy, so a
+    * batch's bands are computed once per probe. */
+  private def probeBands(newDocs: DataFrame,
+      params: (Int, Int, Int, Int)): DataFrame = {
+    val (nsw, nh, nb, buckets) = params
+    Barriers.barrier(lshBands(newDocs, nsw, nh, nb)
+      // int, matching the inferred partition column type — see
+      // [[writeMinhashIndex]]'s bucket comment (a cast on the partition
+      // attribute would defeat partition pruning)
+      .withColumn("bucket",
+        pmod(col("band_hash"), lit(buckets.toLong)).cast("int")))
+  }
+
+  /** The `bands/` rows (opened by [[probedBuckets]]) matching a probe's
+    * band keys — the pruned scan every against-index candidate surface
+    * starts from. */
+  private def matchedIndexBands(bands: DataFrame, probe: DataFrame,
+      broadcastProbe: Boolean): DataFrame = {
     val keys0 = probe
       .select(col("bucket"), col("band_id"), col("band_hash")).distinct()
     val keys = if (broadcastProbe) broadcast(keys0) else keys0
-    spark.read.schema(bandsSchema).parquet(s"$dir/bands")
-      .join(keys, Seq("bucket", "band_id", "band_hash"), "left_semi")
+    bands.join(keys, Seq("bucket", "band_id", "band_hash"), "left_semi")
   }
 
   /** [[minhashHotBands]] for the against-index probe: the matched band
@@ -1968,12 +2058,11 @@ object Dedup {
   def minhashHotBandsAgainstIndex(spark: SparkSession,
       newDocs: DataFrame, dir: String, maxBandFreq: Long = 1000L,
       broadcastProbe: Boolean = true): DataFrame = {
-    val (nsw, nh, nb, buckets) = readMinhashIndexParams(spark, dir)
-    val newBands = lshBands(newDocs, nsw, nh, nb)
-      .withColumn("bucket",
-        pmod(col("band_hash"), lit(buckets.toLong)).cast("int"))
+    val newBands0 = probeBands(newDocs, readMinhashIndexParams(spark, dir))
+    val newBands = newBands0
       .where(col("band_id") >= 0) // the DPP predicate, as in the probe
-    matchedIndexBands(spark, dir,
+    matchedIndexBands(
+        probedBuckets(spark, s"$dir/bands", Some(bandsSchema), newBands0),
         if (broadcastProbe) broadcast(newBands) else newBands,
         broadcastProbe)
       .groupBy(col("bucket"), col("band_id"), col("band_hash"))
@@ -2222,10 +2311,11 @@ object Dedup {
   }
 
   private[graft] def readBenchmarkIndexParams(spark: SparkSession,
-      dir: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("num_shingle_words"), r.getAs[Int]("hash_buckets"))
-  }
+      dir: String): (Int, Int) =
+    IndexMeta.cached(spark, "benchmark-params", dir) {
+      val r = spark.read.parquet(s"$dir/params").head()
+      (r.getAs[Int]("num_shingle_words"), r.getAs[Int]("hash_buckets"))
+    }
 
   /** The decontamination REPORT ([[contaminationScreen]]'s exact
     * columns and rows) computed against a [[writeBenchmarkIndex]]
@@ -2266,15 +2356,17 @@ object Dedup {
     val sh = Barriers.barrier(
       shingleHashArrays(docs, nsw).select(col("doc_id"),
         coalesce(col("sh"), typedLit(Array.empty[Long])).as("sh")))
-    val probe0 = sh.select(explode(col("sh")).as("h")).distinct()
+    // keys derive from the barrier'd arrays: the bucket list and the
+    // probe join both read that copy
+    val keys = sh.select(explode(col("sh")).as("h")).distinct()
       .withColumn("bucket", pmod(col("h"), lit(buckets.toLong)).cast("int"))
-      // vacuously-true binary comparison marking the probe side
-      // likely-selective so dynamic partition pruning fires — the
-      // [[minhashCandidatesAgainstIndex]] predicate trick
-      .where(col("h") >= lit(Long.MinValue))
+    // vacuously-true binary comparison marking the probe side
+    // likely-selective so dynamic partition pruning fires — the
+    // [[minhashCandidatesAgainstIndex]] predicate trick
+    val probe0 = keys.where(col("h") >= lit(Long.MinValue))
     val probe = if (broadcastProbe) broadcast(probe0) else probe0
-    val matched0 = spark.read.schema(benchHashesSchema)
-      .parquet(s"$dir/hashes")
+    val matched0 = probedBuckets(spark, s"$dir/hashes",
+        Some(benchHashesSchema), keys)
       .join(probe, Seq("bucket", "h"), "left_semi")
       .select(col("h")).distinct()
     val matched = if (broadcastProbe) broadcast(matched0) else matched0
@@ -2400,15 +2492,18 @@ object Dedup {
     val (multiAssign, _) = Similarity.readIvfIndexParams(spark, dir)
     val np = if (nprobe <= 0) cents.length
       else math.min(nprobe, cents.length)
-    val probes = broadcast(
+    // the (eval vector, probed cell) rows, materialized once: the cell
+    // list and the probe join both read this copy
+    val keys = Barriers.barrier(
       evalVecs.select(col("vec_id").as("eval_id"),
         col("embedding").as("eval_vec"),
-        explode(Similarity.probeCells(cents, np)).as("cell"))
-        // vacuously-true comparison marking the probe likely-selective
-        // so dynamic partition pruning fires (the
-        // [[semanticNearDupAgainstIndex]] trick)
-        .where(col("cell") >= 0))
-    val hits = spark.read.schema(cellsSchema).parquet(s"$dir/cells")
+        explode(Similarity.probeCells(cents, np)).as("cell")))
+    // vacuously-true comparison marking the probe likely-selective so
+    // dynamic partition pruning fires (the
+    // [[semanticNearDupAgainstIndex]] trick)
+    val probes = broadcast(keys.where(col("cell") >= 0))
+    val hits = probedBuckets(spark, s"$dir/cells", Some(cellsSchema),
+        keys, "cell")
       .join(probes, Seq("cell"))
       .select(col("vec_id"), col("eval_id"),
         native.fvec_cosine(col("embedding"), col("eval_vec"))
@@ -2790,16 +2885,19 @@ object Dedup {
     val cents = Similarity.readIvfCentroids(spark, dir)
     val (multiAssign, quantizer) =
       Similarity.readIvfIndexParams(spark, dir)
-    val batch = tagWith(
+    // the tagged batch, materialized once: the cell list and the probe
+    // join both read this copy
+    val keys = Barriers.barrier(tagWith(
       newVecs.select(col("vec_id"), col("embedding")), cents,
       multiAssign, quantizer)
       .select(col("cell"), col("vec_id").as("new_id"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      // vacuously-true comparison marking the probe likely-selective
-      // so dynamic partition pruning fires (the minhash-probe trick)
-      .where(col("cell") >= 0)
+        col("embedding").as("eb"), col("nrm").as("nb")))
+    // vacuously-true comparison marking the probe likely-selective so
+    // dynamic partition pruning fires (the minhash-probe trick)
+    val batch = keys.where(col("cell") >= 0)
     val probe = if (broadcastProbe) broadcast(batch) else batch
-    val idx = spark.read.schema(cellsSchema).parquet(s"$dir/cells")
+    val idx = probedBuckets(spark, s"$dir/cells", Some(cellsSchema), keys,
+        "cell")
       .select(col("cell"), col("vec_id"), col("embedding").as("ea"),
         native.fvec_norm(col("embedding")).as("na"))
     val pairs = idx.join(probe, Seq("cell"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * `params/` file stamp — the one mechanism behind every "read the
   * stored geometry once, not once per probe/trigger" surface here
   * ([[graft.streaming.StreamingAgg]]'s bridge metadata,
-  * [[Similarity.readIvfStorage]]'s storage dispatch).
+  * [[Similarity.readIvfStorage]]'s storage dispatch, and every index
+  * family's probe-side params reader in [[Dedup]] and [[Similarity]]).
   *
   * The cached values are immutable for the life of an index: signature
   * params and IVF geometry never change after the write —
@@ -36,10 +37,20 @@ object IndexMeta {
   }
 
   /** Return `read`'s value for (`kind`, `indexDir`) under the current
-    * `params/` stamp, computing it at most once per JVM per stamp. */
+    * `params/` stamp, computing it once per JVM per stamp (two threads
+    * missing the same key together may both read; the first value
+    * stored wins). `read` runs OUTSIDE the map's lock, so a cached
+    * reader may itself call a cached reader — the bridges cache slices
+    * of the families' params readers, which are cached too. */
   def cached[A <: AnyRef](spark: SparkSession, kind: String,
-      indexDir: String)(read: => A): A =
-    cache.computeIfAbsent(
-      s"$kind:$indexDir:${paramsStamp(spark, indexDir)}", _ => read)
-      .asInstanceOf[A]
+      indexDir: String)(read: => A): A = {
+    val key = s"$kind:$indexDir:${paramsStamp(spark, indexDir)}"
+    val hit = cache.get(key)
+    if (hit != null) hit.asInstanceOf[A]
+    else {
+      val v = read
+      val prev = cache.putIfAbsent(key, v)
+      (if (prev == null) v else prev).asInstanceOf[A]
+    }
+  }
 }

@@ -30,6 +30,10 @@ import graft.model.{CountRow, LogEntry}
   */
 object RiskAggregation {
 
+  /** Op 5's output order (reference main.py:217). */
+  private def referenceOrder: Seq[Column] = Seq(col("date").desc,
+    col("country").asc, col("asn").asc, col("risk").asc)
+
   /** Ops 6-7: project to the dedup tuple and truncate the timestamp to day.
     * Catalyst pushes the projection into the scan (column pruning), so a
     * parquet-backed feed only reads these five columns.
@@ -55,8 +59,7 @@ object RiskAggregation {
       .where(col("count") > threshold)
       .withColumn("count_amplified", lit(0.0))
       .select("date", "risk", "country", "asn", "count", "count_amplified")
-      .orderBy(col("date").desc, col("country").asc, col("asn").asc,
-        col("risk").asc)
+      .orderBy(referenceOrder: _*)
 
   /** Op 11: the amplified-count update-join (reference main.py:219-229).
     * Left join so unmatched rows keep the 0 placeholder; matched rows take
@@ -78,10 +81,15 @@ object RiskAggregation {
       .drop("id", "amplification_factor")
   }
 
-  /** Full pipeline: aggregate then amplify. */
+  /** Full pipeline: aggregate then amplify, in op 5's order. The sort
+    * is applied AFTER the amplify join: a join does not keep its
+    * input's order, and Catalyst's EliminateSorts drops a Sort below a
+    * join outright, so [[aggregate]]'s own ordering does not survive
+    * [[amplify]]. */
   def run(logentry: DataFrame, dimRisk: DataFrame,
       threshold: Long = 100L): DataFrame =
     amplify(aggregate(logentry, threshold), dimRisk)
+      .orderBy(referenceOrder: _*)
 
   /** Generic form of the same pipeline over any event-shaped table:
     * `projected` must already contain the dedup-key and group columns; dedup

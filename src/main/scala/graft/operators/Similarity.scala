@@ -374,13 +374,13 @@ object Similarity {
     * collision with a corpus vec_id is not a self-hit, and excluding
     * it would silently drop that document from that query's ranking.
     */
-  private def probeScored(indexed: DataFrame, queries: DataFrame,
+  private def probeScored(cells: CellSource, queries: DataFrame,
       centroids: Array[(Int, Array[Float])],
       nprobe: Int, dedupCandidates: Boolean,
       excludeSelf: Boolean = true): DataFrame = {
-    val probes = queries.select(
+    val (indexed, probes) = cells(queries.select(
       col("vec_id").as("query_id"), col("embedding").as("query_vec"),
-      explode(probeCells(centroids, nprobe)).as("cell"))
+      explode(probeCells(centroids, nprobe)).as("cell")))
     val joined = indexed.join(broadcast(probes), Seq("cell"))
     val kept =
       if (excludeSelf) joined.where(col("query_id") =!= col("vec_id"))
@@ -392,13 +392,38 @@ object Similarity {
     else scored
   }
 
-  private def probeAndRank(indexed: DataFrame, queries: DataFrame,
+  private def probeAndRank(cells: CellSource, queries: DataFrame,
       centroids: Array[(Int, Array[Float])], k: Int,
       nprobe: Int, dedupCandidates: Boolean = false,
       excludeSelf: Boolean = true): DataFrame =
     topKByScoreDesc(
-      probeScored(indexed, queries, centroids, nprobe, dedupCandidates,
+      probeScored(cells, queries, centroids, nprobe, dedupCandidates,
         excludeSelf), k)
+
+  /** How a probe opens the cell-tagged corpus, given its (query, cell)
+    * probe rows: returns the corpus side and the probe side to join. */
+  private type CellSource = DataFrame => (DataFrame, DataFrame)
+
+  /** An inline cell-tagged corpus: the probe rows join it as they are. */
+  private def inlineCells(indexed: DataFrame): CellSource =
+    probes => (indexed, probes)
+
+  /** A [[writeIvfIndex]] layout's `cells/`, optionally pre-filtered by
+    * `predicate`: the probe rows are materialized once, only the cell
+    * directories they name are listed and read
+    * ([[Dedup.probedBuckets]]), and the probe side carries a
+    * vacuously-true comparison, planted on the materialized copy, that
+    * marks it likely-selective so dynamic partition pruning fires (the
+    * minhash-probe trick). */
+  private def storedCells(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String,
+      predicate: Option[org.apache.spark.sql.Column] = None): CellSource = {
+    probes =>
+      val keys = Barriers.barrier(probes)
+      val scan = Dedup.probedBuckets(spark, s"$indexDir/cells", None,
+        keys, "cell")
+      (predicate.fold(scan)(scan.where), keys.where(col("cell") >= 0))
+  }
 
   /** The nlist above which "auto" switches to the two-level quantizer:
     * the measured crossover (docs/BENCH_SF1.md appendix) — at nlist=64
@@ -482,7 +507,7 @@ object Similarity {
         kmeansCentroids(corpus, nlist, kmeansIters, quantizer)
       else collectCentroids(ivfCentroids(corpus, nlist))
     val indexed = assignWith(quantizer, corpus, centArr, multiAssign)
-    probeAndRank(indexed, queries, centArr, k, nprobe,
+    probeAndRank(inlineCells(indexed), queries, centArr, k, nprobe,
       dedupCandidates = multiAssign > 1)
   }
 
@@ -507,7 +532,7 @@ object Similarity {
     // materialize the scored candidate stream once: the top-k ranking
     // AND the scanned-pair count both consume it, and it is the most
     // expensive stage (cell-tag + probe join) of the whole report
-    val scored = probeScored(indexed, queries, centArr, nprobe,
+    val scored = probeScored(inlineCells(indexed), queries, centArr, nprobe,
       dedupCandidates = multiAssign > 1).localCheckpoint()
     val exact = bruteForceTopK(corpus, queries, k)
       .select(col("query_id"), col("vec_id"))
@@ -863,21 +888,27 @@ object Similarity {
   }
 
   /** The stored assignment geometry of a [[writeIvfIndex]] layout:
-    * (multi_assign, resolved quantizer name). One driver-sized read. */
+    * (multi_assign, resolved quantizer name). One driver-sized read,
+    * cached per JVM on the `params/` stamp ([[IndexMeta.cached]]). */
   def readIvfIndexParams(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, String) = {
-    val r = spark.read.parquet(s"$dir/params").head()
-    (r.getAs[Int]("multi_assign"), r.getAs[String]("quantizer"))
-  }
+      dir: String): (Int, String) =
+    IndexMeta.cached(spark, "ivf-params", dir) {
+      val r = spark.read.parquet(s"$dir/params").head()
+      (r.getAs[Int]("multi_assign"), r.getAs[String]("quantizer"))
+    }
 
   /** The stored centroid set of a [[writeIvfIndex]] layout, in cell
     * order — nlist rows to the driver, the same scale class as
-    * [[collectCentroids]]. */
+    * [[collectCentroids]]. Cached on the `params/` stamp: every write
+    * of `centroids/` ([[writeIvfIndex]], [[rebuildIvfIndex]]) rewrites
+    * `params/` after it. Callers must not mutate the returned arrays. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[(Int, Array[Float])] =
-    spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
+    IndexMeta.cached(spark, "ivf-centroids", dir) {
+      spark.read.parquet(s"$dir/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        .sortBy(_._1)
+    }
 
   /** IVF top-k over a [[writeIvfIndex]] layout: the broadcast probe join
     * keys on the PARTITION column, so Spark's dynamic partition pruning
@@ -907,7 +938,7 @@ object Similarity {
       case ("sq8", vb) => sq8ProbeAndRank(spark, indexDir, queries,
         centroids, k, nprobe, rerank, multiAssigned, None, vb,
         excludeSelf)
-      case _ => probeAndRank(spark.read.parquet(s"$indexDir/cells"),
+      case _ => probeAndRank(storedCells(spark, indexDir),
         queries, centroids, k, nprobe, dedupCandidates = multiAssigned,
         excludeSelf = excludeSelf)
     }
@@ -965,7 +996,7 @@ object Similarity {
         readIvfCentroids(spark, indexDir), k, nprobe, rerank,
         multiAssigned, Some(predicate), vb)
       case _ => probeAndRank(
-        spark.read.parquet(s"$indexDir/cells").where(predicate),
+        storedCells(spark, indexDir, Some(predicate)),
         queries, readIvfCentroids(spark, indexDir), k, nprobe,
         dedupCandidates = multiAssigned)
     }
@@ -1003,16 +1034,11 @@ object Similarity {
       predicate: Option[org.apache.spark.sql.Column],
       vecBuckets: Int, excludeSelf: Boolean = true): DataFrame = {
     val r = if (rerank > 0) rerank else 4 * k
-    val probes = queries.select(
-      col("vec_id").as("query_id"),
-      native.sq8_encode(col("embedding")).as("qcode"),
-      explode(probeCells(centroids, nprobe)).as("cell"))
-      // vacuously-true binary comparison marking the probe side
-      // likely-selective so dynamic partition pruning fires (the
-      // minhash-probe trick)
-      .where(col("cell") >= 0)
-    val scan0 = spark.read.parquet(s"$indexDir/cells")
-    val scan = predicate.fold(scan0)(p => scan0.where(p))
+    val (scan, probes) = storedCells(spark, indexDir, predicate)(
+      queries.select(
+        col("vec_id").as("query_id"),
+        native.sq8_encode(col("embedding")).as("qcode"),
+        explode(probeCells(centroids, nprobe)).as("cell")))
     val joined = scan.join(broadcast(probes), Seq("cell"))
     // same external-vs-corpus id-space rule as probeScored: the
     // self filter only means "self" when query ids ARE corpus ids

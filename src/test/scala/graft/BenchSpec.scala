@@ -94,8 +94,9 @@ class BenchSpec extends SparkSuite {
       "a few cheap entries") {
     // every current query at a realistic 4-char time — the full
     // inventory sits AT the physical ceiling, so a handful of cheap
-    // entries may trim (disclosed + preserved in bench_full.json), but
-    // wholesale trimming means names outgrew the capture window
+    // entries may trim (disclosed + preserved in the full-detail file
+    // target/bench_full_<sf>_c<cpus>.json), but wholesale trimming
+    // means names outgrew the capture window
     val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 0.55)
     val json = Bench.renderJson(results, Set.empty, "sf0.1")
     assert(json.length <= Bench.LineBudget, s"len ${json.length}")
@@ -105,9 +106,9 @@ class BenchSpec extends SparkSuite {
     // ceiling physically fits ~70 entries at current name lengths, so
     // past that every added query trims one cheap entry BY DESIGN
     // (disclosed via dropped:N, full detail preserved in
-    // target/bench_full.json) — a dropped-count cap would fail on
-    // steady inventory growth alone. The failure mode this canary
-    // exists for is WHOLESALE trimming — a name-length regression
+    // target/bench_full_<sf>_c<cpus>.json) — a dropped-count cap would
+    // fail on steady inventory growth alone. The failure mode this
+    // canary exists for is WHOLESALE trimming — a name-length regression
     // blowing half the line away — which shows as the SURVIVOR count
     // collapsing below the physical fit (r9: 95 entries → 71 kept;
     // r13: 108 entries → 71 kept).

@@ -128,6 +128,20 @@ class PipelineSpec extends SparkSuite {
 
     // unload artifact exists, is a single file
     assert(new java.io.File(s"$out/unload/count.csv").isFile)
+    // … whose rows follow the reference's ORDER BY date DESC, country,
+    // asn, risk (reference main.py:217); columns are date, risk,
+    // country, asn, count, count_amplified
+    val unloaded = {
+      val src = scala.io.Source.fromFile(s"$out/unload/count.csv")
+      try src.getLines().map(_.split(",", -1))
+        .map(f => (f(0), f(2), f(3).toLong, f(1).toInt)).toVector
+      finally src.close()
+    }
+    assert(unloaded.map(_._1).distinct.size > 1, unloaded)
+    assert(unloaded === unloaded.sortWith { case (x, y) =>
+      if (x._1 != y._1) x._1 > y._1
+      else Ordering[(String, Long, Int)].lt((x._2, x._3, x._4),
+        (y._2, y._3, y._4)) })
 
     // counts: amplified where dim matches, 0 where not
     val amped = result.counts.where($"risk" === 2 && $"count_amplified" > 0)

@@ -124,4 +124,21 @@ class RiskAggregationSpec extends SparkSuite {
       ("2016-09-20 00:00:00.0", 2, "PE", 12252L, 1L, 0.0),
       ("2016-09-20 00:00:00.0", 2, "US", 12252L, 2L, 0.0)))
   }
+
+  test("run returns rows in the reference's ORDER BY date DESC, country, " +
+      "asn, risk — after the amplify join, not only before it") {
+    val rows = for {
+      d <- 20 to 24
+      c <- Seq("US", "PE", "BR", "DE", "AR", "JP")
+      a <- Seq(7L, 12252L, 64512L, 3L)
+      r <- Seq(2, 1)
+    } yield (f"2016-09-$d%02d 00:00:01", s"ip-$c-$a-$r", r, a, c)
+    val dim = Seq((1, Some(41.0)), (2, Some(556.9)))
+      .toDF("id", "amplification_factor")
+    val got = RiskAggregation.run(logentry(rows: _*), dim, 0).collect()
+      .map(r => (r.getTimestamp(0).getTime, r.getString(2), r.getLong(3),
+        r.getInt(1))).toSeq
+    assert(got.size === rows.size)
+    assert(got === got.sortBy { case (d, c, a, r) => (-d, c, a, r) })
+  }
 }
