@@ -236,7 +236,10 @@ object Pipeline {
     *      signatures are NOT recomputed; probe IO — file discovery
     *      as well as the scan ([[Dedup.probedBuckets]]) — is ∝ the
     *      batch's bucket footprint (a batch naming every bucket still
-    *      lists them all). Docs in any duplicate cluster keep only
+    *      lists them all). Discovery runs on the driver, one
+    *      `listStatus` per named directory: no Spark listing job and
+    *      no 32-path threshold, however many buckets the batch names.
+    *      Docs in any duplicate cluster keep only
     *      the cluster's canonical (min id — always the INDEXED doc
     *      for cross pairs, because ids are monotone across batches);
     *      then the survivors' texts are substring-deduplicated against

@@ -1640,34 +1640,39 @@ object Dedup {
   /** The ONE way an against-index probe opens a bucket-partitioned
     * index dataset: only the partition directories the probe names are
     * listed and read, so file DISCOVERY, not just the scan, is ∝ the
-    * probe's bucket footprint.
+    * probe's bucket footprint — and it runs on the driver, with no
+    * Spark job however many buckets the probe names.
     *
     * `spark.read.parquet(root)` discovers partitions by listing every
     * `bucket=` directory under `root`, and past
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) it
-    * does so with a distributed job of one task per directory — a
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * it does so with a distributed job of one task per directory — a
     * 256-task job on every one-document lookup against the default band
-    * buckets, before the dynamically pruned scan reads its few files.
-    * Here the driver lists `root` once (one Hadoop `listStatus`), keeps
-    * the `<part>=<int>` directories whose value the probe's `keys` name,
-    * and reads exactly those with `basePath = root`: `part` stays a
-    * partition column, so the probe join's dynamic partition pruning
-    * filter still plants. Entries that are not `<part>=<int>`
-    * directories (`_LEASE`, `_temporary`, `params`, stray files) are
-    * never read as buckets. No named bucket on disk → an empty frame of
-    * the same schema. A probe naming more than the threshold's count of
-    * directories still lists them with Spark's parallel job, as the
-    * whole-root read did.
+    * buckets, and one per probed family on a weekly batch that names
+    * most buckets. Here the driver lists `root` once (one Hadoop
+    * `listStatus`), keeps the `<part>=<int>` directories whose value the
+    * probe's `keys` name, lists each of those once more for its data
+    * files, and builds the relation from those files
+    * ([[ListedParquet.read]]: the relation a `basePath = root`
+    * `DataFrameReader` read builds, with no second listing and no
+    * 32-path threshold): `part` stays a partition column, so the probe
+    * join's dynamic partition pruning filter still plants. Entries that
+    * are not `<part>=<int>` directories (`_LEASE`, `_temporary`,
+    * `params`, stray files) are never read as buckets, nor are the
+    * names Spark's listing skips inside a named bucket (`.crc`,
+    * `_SUCCESS`, `_temporary`, other `_`/`.` names). No named bucket on
+    * disk → an empty frame of the same schema.
     *
     * `keys` (any frame with an int `part` column) is read twice — here
     * for its distinct values and again by the caller's join — so
     * callers pass MATERIALIZED key rows ([[Barriers.barrier]], or a
     * cheap projection of one) and plant their DPP marker predicate
     * AFTER the barrier, where the pruning rule can see it. `schema`
-    * None infers the columns from the named directories (the IVF
+    * None takes the columns from one listed file's footer (the IVF
     * `cells/` layout, which carries whatever columns the corpus had). A
-    * missing root, or an inferred schema with nothing on disk, reads
-    * the root as before, failing the way a whole-root read fails.
+    * missing root, or an inferred schema with no file on disk, reads
+    * through `DataFrameReader` as before, failing the way a whole-root
+    * read fails.
     */
   private[operators] def probedBuckets(spark: SparkSession, root: String,
       schema: Option[StructType], keys: DataFrame,
@@ -1679,23 +1684,25 @@ object Dedup {
       val r = schema.fold(spark.read)(spark.read.schema)
       if (base) r.option("basePath", root) else r
     }
+    def read(dirs: Seq[Path]) = ListedParquet.read(spark, root, dirs, schema)
+      .getOrElse(reader(base = true).parquet(dirs.map(_.toString): _*))
     val prefix = s"$part="
     val rootExists = fs.exists(rootPath)
-    val onDisk: Map[Int, String] =
+    val onDisk: Map[Int, Path] =
       if (!rootExists) Map.empty
       else fs.listStatus(rootPath).iterator
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
         .flatMap(s => s.getPath.getName.drop(prefix.length).toIntOption
-          .map(_ -> s.getPath.toString))
+          .map(_ -> s.getPath))
         .toMap
-    val paths = keys.select(col(part)).distinct().collect()
+    val dirs = keys.select(col(part)).distinct().collect()
       .filterNot(_.isNullAt(0)).flatMap(r => onDisk.get(r.getInt(0)))
-      .sorted
-    if (paths.nonEmpty) reader(base = true).parquet(paths.toSeq: _*)
+      .sortBy(_.toString)
+    if (dirs.nonEmpty) read(dirs.toSeq)
     else (schema, onDisk.values.headOption) match {
       case (Some(s), _) if rootExists => spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-      case (None, Some(p)) => reader(base = true).parquet(p).where(lit(false))
+      case (None, Some(p)) => read(Seq(p)).where(lit(false))
       case _ => reader(base = false).parquet(root)
     }
   }
@@ -1845,11 +1852,12 @@ object Dedup {
     * lists and scans only the batch's DISTINCT band buckets
     * ([[probedBuckets]]: file discovery, not just the scan, is ∝ the
     * named buckets — a one-document lookup lists 8 directories, not
-    * 256), so pruning pays exactly when `batch docs × bands` (the
-    * batch's band rows, each naming one bucket) is comfortably below
-    * `bandBuckets`; past that point every bucket is named and the probe
-    * lists and reads the whole index once regardless (more than 32
-    * named directories are listed by Spark's parallel listing job).
+    * 256 — and runs on the driver, one `listStatus` per named
+    * directory, with no Spark job and no 32-path threshold), so
+    * pruning pays exactly when `batch docs × bands` (the batch's band
+    * rows, each naming one bucket) is comfortably below `bandBuckets`;
+    * past that point every bucket is named and the probe lists and
+    * reads the whole index once regardless.
     * Measured at sf1 (docs/BENCH_SF1.md, round-9 appendix): a 520-doc
     * batch × 8 bands hits all 256 default buckets — zero pruning, the
     * 6.7 s probe is still 1.7× under the full re-run purely on compute,

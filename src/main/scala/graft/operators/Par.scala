@@ -39,6 +39,11 @@ object Par {
     * single-task inputs run inline. `parallelism` bounds driver-side
     * concurrency — 3-4 in-flight jobs is enough to fill a stage tail
     * without starving any one job of executors (guide §2.6).
+    *
+    * An interrupt of the calling thread cancels the tasks that have not
+    * started (they never will), keeps awaiting the in-flight ones, then
+    * rethrows: a task failure if one occurred, else an
+    * InterruptedException, with the thread's interrupt flag set again.
     */
   def run(parallelism: Int)(tasks: Seq[() => Unit]): Unit = {
     require(parallelism > 0, s"parallelism must be > 0, got $parallelism")
@@ -46,10 +51,15 @@ object Par {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, tasks.size))
     try {
-      val futures = tasks.map(t =>
+      // a task's start and its cancellation race for the same flag, so a
+      // task either runs to the end or never starts
+      val claimed = tasks.map(_ => new java.util.concurrent.atomic
+        .AtomicBoolean(false))
+      val futures = tasks.zip(claimed).map { case (t, c) =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        }))
+          def call(): Unit = if (c.compareAndSet(false, true)) t()
+        })
+      }
       var failure: Throwable = null
       var interrupted = false
       def record(t: Throwable): Unit =
@@ -63,20 +73,24 @@ object Par {
               record(if (e.getCause != null) e.getCause else e)
               settled = true
             case e: java.util.concurrent.CancellationException =>
-              record(e); settled = true
+              if (!interrupted) record(e)
+              settled = true
             case _: InterruptedException =>
               // the scaladoc's no-dangling-write promise: an interrupt
               // must NOT abandon in-flight writes on live pool threads
-              // — remember it, keep awaiting, re-assert the flag after
-              // every task has settled
+              // — cancel what has not started, keep awaiting the rest,
+              // re-assert the flag after every task has settled
               interrupted = true
+              futures.zip(claimed).foreach { case (g, c) =>
+                if (c.compareAndSet(false, true)) g.cancel(false) }
           }
         }
       }
       if (interrupted) Thread.currentThread().interrupt()
       if (failure != null) throw failure
       if (interrupted) throw new InterruptedException(
-        "Par.run interrupted (all tasks were awaited first)")
+        "Par.run interrupted (unstarted tasks were cancelled, in-flight " +
+          "ones awaited)")
     } finally pool.shutdown()
   }
 }
