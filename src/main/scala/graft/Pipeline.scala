@@ -429,8 +429,9 @@ object Pipeline {
       // the tokenizer model ALREADY READ (the writeTrainingShardsWith
       // seam): a cron line that pre-flighted the shards append has
       // validated and read the same complete model one call earlier —
-      // passing it skips this refresh's own model re-read. Ignored
-      // without tokenizerModelDir (the dir names the modality).
+      // passing it skips this refresh's own model re-read; a model
+      // whose digest differs from the dir's refuses. Ignored without
+      // tokenizerModelDir (the dir names the modality).
       tokenizerModel: Option[graft.operators.Bpe.BpeModel] = None)
       : RefreshOutput = {
     require(semanticEvalDir.isEmpty || embeddings.isDefined,
@@ -455,25 +456,37 @@ object Pipeline {
     // schema probe + full read — ~6 metadata jobs per refresh at the
     // old shape; guide §1.2 "don't compute things you throw away")
     val bpeFull = tokenizerModelDir.map { d =>
+      // refusal contract FIRST: a crashed (params-less) model dir must
+      // raise the readers' IllegalArgumentException("…params…"), not
+      // leak Spark's AnalysisException out of the params read
+      val paramsPath = new org.apache.hadoop.fs.Path(s"$d/params")
+      require(paramsPath
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(paramsPath),
+        s"$d has no params/ — not a written BPE model (or its " +
+          "write crashed before the params commit); re-run " +
+          "writeModel")
+      val params = spark.read.parquet(s"$d/params")
       tokenizerModel match {
         // pre-read complete model: its read already ran the refusal
-        // chain (params-less dir, rank holes, digest) — re-probing
-        // the same dir here would be the redundant pass the seam
-        // exists to remove
-        case Some(m) => Right(m)
+        // chain (rank holes, digest), so the dir is not re-read — but
+        // it must BE the dir's model, or the encodings and the report's
+        // provenance stamp would come from a model the dir does not
+        // hold. One params-row read decides; a legacy row without a
+        // digest is tolerated, as readFullModel tolerates it
+        case Some(m) =>
+          if (params.schema.fieldNames.contains("model_digest")) {
+            val stored = params.head().getAs[String]("model_digest")
+            val passed = graft.operators.Bpe.modelDigest(m)
+            require(stored == passed,
+              s"refreshCorpus: the passed tokenizerModel (digest " +
+                s"$passed) is not the " +
+                s"model stored in $d (model_digest $stored) — pass the " +
+                "model read from that dir, or omit it")
+          }
+          Right(m)
         case None =>
-          // refusal contract FIRST: a crashed (params-less) model dir
-          // must raise the readers' IllegalArgumentException("…params…"),
-          // not leak Spark's AnalysisException out of the schema probe
-          val paramsPath = new org.apache.hadoop.fs.Path(s"$d/params")
-          require(paramsPath
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(paramsPath),
-            s"$d has no params/ — not a written BPE model (or its " +
-              "write crashed before the params commit); re-run " +
-              "writeModel")
-          if (spark.read.parquet(s"$d/params").schema.fieldNames
-              .contains("n_alphabet"))
+          if (params.schema.fieldNames.contains("n_alphabet"))
             Right(graft.operators.Bpe.readFullModel(spark, d))
           else Left(graft.operators.Bpe.readModel(spark, d))
       }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+
+import graft.operators.{Barriers, Dedup, Lease}
 
 /** Structured-Streaming variant of the flagship aggregation (extension
   * tier — the reference is pure batch, re-run per feed drop; this is the
@@ -56,11 +59,120 @@ object StreamingAgg {
     */
   def dedupDocumentsStream(docs: DataFrame,
       horizon: String = "1 hour"): DataFrame =
-    docs
-      .withWatermark("ts", horizon)
-      .withColumn("fingerprint",
-        md5(graft.operators.Dedup.normalized(col("text"))))
-      .dropDuplicatesWithinWatermark("fingerprint")
+    watermarked(docs, horizon, Some(textFingerprint))
+
+  private def textFingerprint: Column = md5(Dedup.normalized(col("text")))
+
+  /** `rows` under the `ts` watermark; with a `fingerprint`, exact
+    * duplicates collapse in-stream on it (the column stays on the
+    * output) with state bounded by the horizon. */
+  private def watermarked(rows: DataFrame, horizon: String,
+      fingerprint: Option[Column]): DataFrame = {
+    val w = rows.withWatermark("ts", horizon)
+    fingerprint.fold(w)(fp => w.withColumn("fingerprint", fp)
+      .dropDuplicatesWithinWatermark("fingerprint"))
+  }
+
+  /** The source step of every bridge: [[watermarked]], then
+    * `foreachBatch` with the fingerprint dropped before `perTrigger`
+    * sees the micro-batch. */
+  private def bridge(rows: DataFrame, horizon: String,
+      fingerprint: Option[Column] = None)(
+      perTrigger: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    watermarked(rows, horizon, fingerprint).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        perTrigger(
+          if (fingerprint.isDefined) batch.drop("fingerprint") else batch,
+          batchId)
+      }
+
+  /** A trigger's materializations: each [[Barriers.barrier]] taken
+    * here is named `stream batch <id>` in the block manager and
+    * released by [[release]]. */
+  private final class Held(batchId: Long) {
+    private val rdds =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    def apply(df: DataFrame): DataFrame = {
+      val m = Barriers.barrier(df)
+      m.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          rdds += r.rdd.setName(s"stream batch $batchId")
+        case _ =>
+      }
+      m
+    }
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The index-mutating bridges' commit → lease → append: the probe's
+    * output commits under `indexDir` ([[commitBatchOutput]]) before
+    * `append`, when set, folds (batch, committed output) into the
+    * index under the single-writer lease — a maintenance pass over the
+    * index mid-stream refuses, or is refused, instead of interleaving. */
+  private case class Commit(indexDir: String,
+      append: Option[(DataFrame, DataFrame) => Unit])
+
+  /** The per-trigger step of every bridge. The caller has already run
+    * its model/index validation, so a missing or crashed dir refuses on
+    * every batch, empty ones included. The batch is materialized ONCE:
+    * every job after the barrier reads its blocks, never the source or
+    * the fingerprint stage's state store upstream of it. An empty
+    * batch sinks `empty` of an empty frame of the batch's schema and
+    * skips the probe's re-planned jobs (the fixed floor worth
+    * skipping); otherwise `probe` runs — under [[commitBatchOutput]]
+    * and followed by the lease-held append for a [[Commit]] bridge —
+    * and its output reaches `sink`.
+    *
+    * What the trigger materialized is released when it ends, except
+    * where the sink's frame still reads it: a probe-only bridge hands
+    * the sink a frame over the batch's blocks, and a sink may keep
+    * that frame past the trigger (cache it, read it later), so those
+    * blocks are left to Spark's ContextCleaner, which frees them once
+    * the frame is unreachable. A commit bridge's sink reads the
+    * committed staging, so all of its trigger's blocks go. */
+  private def onTrigger(batch: DataFrame, batchId: Long,
+      sink: (DataFrame, Long) => Unit, commit: Option[Commit] = None)(
+      empty: DataFrame => DataFrame)(
+      probe: (DataFrame, Held) => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val held = new Held(batchId)
+    val b = held(batch)
+    var sinkReadsBatch = false
+    try if (b.isEmpty)
+      sink(empty(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), b.schema)), batchId)
+    else commit match {
+      case None =>
+        sinkReadsBatch = true
+        sink(probe(b, held), batchId)
+      case Some(Commit(dir, append)) =>
+        val out = commitBatchOutput(spark, dir, batchId)(probe(b, held))
+        append.foreach(a => Lease.withLeases(spark, Seq(dir),
+          s"stream-append batch=$batchId")(a(b, out)))
+        sink(out, batchId)
+    } finally if (!sinkReadsBatch) held.release()
+  }
+
+  /** The probe of the text, media and embedding bridges: a batch row
+    * that pairs with the standing index drops (index wins; every
+    * `cross` pair names exactly one batch id), then each within-batch
+    * near-dup cluster among the rest keeps its min-id canonical
+    * (`within` pairs the kept `keys`). The cross ids and the within
+    * pairs are materialized once each: the clustering loop runs a job
+    * per round over them, and each of those would otherwise re-run the
+    * probe and the pair scoring upstream. */
+  private def dropCrossThenCluster(rows: DataFrame, keys: DataFrame,
+      idCol: String, held: Held, cross: DataFrame)(
+      within: DataFrame => DataFrame): DataFrame = {
+    val crossIds = held(cross.select(col("id_a").as(idCol))
+      .unionByName(cross.select(col("id_b").as(idCol)))
+      .distinct())
+    val pairs = held(within(
+      keys.join(broadcast(crossIds), Seq(idCol), "left_anti")))
+    Dedup.dedupByClusters(
+      rows.join(broadcast(crossIds), Seq(idCol), "left_anti"),
+      pairs, idCol = idCol)
+  }
 
   /** Streaming incremental TEXT near-dup against a persisted minhash
     * index ([[graft.operators.Dedup.writeMinhashIndex]]) — the
@@ -80,9 +192,10 @@ object StreamingAgg {
     *
     * Cost shape to know: each micro-batch re-plans its ~15 probe/
     * verify/append jobs, and the minhash expression plans are
-    * codegen-heavy — a FIXED tens-of-seconds floor per micro-batch on
-    * a cold JVM regardless of batch size (empty maintenance batches
-    * skip it entirely). That floor amortizes over production batch
+    * codegen-heavy — a FIXED floor of seconds per micro-batch
+    * regardless of batch size (StreamBridgeTiming: ~3 s per trigger
+    * on a warm 4-core JVM; empty maintenance batches skip it
+    * entirely). That floor amortizes over production batch
     * sizes (minutes of stream per trigger); for tiny-batch/low-latency
     * regimes prefer the exact in-stream [[dedupDocumentsStream]] and
     * run the near-dup pass as a periodic [[graft.Pipeline
@@ -95,79 +208,54 @@ object StreamingAgg {
   def dedupDocumentsStreamAgainstIndex(docs: DataFrame, indexDir: String,
       horizon: String = "1 hour", threshold: Double = 0.7,
       appendSurvivors: Boolean = true, maxBandFreq: Long = 0L)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    import graft.operators.Dedup
-    docs
-      .withWatermark("ts", horizon)
-      .withColumn("fingerprint", md5(Dedup.normalized(col("text"))))
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processTextBatch(batch.drop("fingerprint"), indexDir,
-          threshold, appendSurvivors, batchId, maxBandFreq)(sink)
-      }
-  }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    bridge(docs, horizon, Some(textFingerprint)) { (batch, batchId) =>
+      processTextBatch(batch, indexDir, threshold, appendSurvivors,
+        batchId, maxBandFreq)(sink)
+    }
 
-  /** [[dedupDocumentsStreamAgainstIndex]]'s per-micro-batch body —
-    * factored like [[processChunkBatch]] so the replay contract is
-    * spec-provable. The probe runs under [[commitBatchOutput]]: a
-    * replayed batch whose append already committed re-emits the
-    * staged survivors (re-probing would find the batch's own rows in
-    * the index and over-drop), and the append re-derives its input
-    * from the committed survivor ids, so the retry is the documented
+  /** [[dedupDocumentsStreamAgainstIndex]]'s per-micro-batch body,
+    * factored out so the replay contract is spec-provable. A replayed
+    * batch whose append already committed re-emits the staged
+    * survivors (re-probing would find the batch's own rows in the
+    * index and over-drop), and the append re-derives its input from
+    * the committed survivor ids, so the retry is the documented
     * idempotent duplicate-row one.
     */
   private[graft] def processTextBatch(batch: DataFrame,
       indexDir: String, threshold: Double, appendSurvivors: Boolean,
       batchId: Long, maxBandFreq: Long = 0L)(
       sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.Dedup
     val spark = batch.sparkSession
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) sink(b, batchId) else {
-      // the STORED signature params drive every stage — the
-      // within-batch candidate pass included, so its recall
-      // geometry matches the cross probe's instead of silently
-      // running the library defaults (cached per index: immutable)
-      val (nsw, nh, bands, buckets) = cachedMeta(spark, "minhash", indexDir)(
-        Dedup.readMinhashIndexParams(spark, indexDir))
-      val doc = b.select(col("doc_id"), col("text"))
-      val survivors = commitBatchOutput(spark, indexDir, batchId) {
-        // maxBandFreq: the exact fingerprint stage above bounds EXACT
-        // template copies, but near-identical variants still pay the
-        // band join — the hot-band cap's disclosed cut applies to both
-        // the cross probe and the within-batch pass
-        val cross = Dedup.nearDupAgainstIndex(spark, doc, indexDir,
-          threshold, maxBandFreq = maxBandFreq)
-        val crossIds = cross.select(col("id_a").as("doc_id"))
-          .unionByName(cross.select(col("id_b").as("doc_id")))
-          .distinct()
-        val kept = doc
-          .join(broadcast(crossIds), Seq("doc_id"), "left_anti")
-        val within = Dedup.jaccardVerify(kept,
+    // the STORED signature params drive every stage — the within-batch
+    // candidate pass included, so its recall geometry matches the
+    // cross probe's instead of silently running the library defaults
+    // (cached per index: immutable)
+    val (nsw, nh, bands, buckets) = cachedMeta(spark, "minhash", indexDir)(
+      Dedup.readMinhashIndexParams(spark, indexDir))
+    def doc(b: DataFrame) = b.select(col("doc_id"), col("text"))
+    val append = Option.when(appendSurvivors) {
+      (b: DataFrame, survivors: DataFrame) =>
+        Dedup.writeMinhashIndex(
+          doc(b).join(survivors.select(col("doc_id")),
+            Seq("doc_id"), "left_semi"),
+          indexDir, numShingleWords = nsw, numHashes = nh,
+          bands = bands, bandBuckets = buckets, mode = "append")
+    }
+    onTrigger(batch, batchId, sink, Some(Commit(indexDir, append)))(
+        identity) { (b, held) =>
+      // maxBandFreq: the exact fingerprint stage bounds EXACT template
+      // copies, but near-identical variants still pay the band join —
+      // the hot-band cap's disclosed cut applies to both the cross
+      // probe and the within-batch pass
+      dropCrossThenCluster(b, doc(b), "doc_id", held,
+          Dedup.nearDupAgainstIndex(spark, doc(b), indexDir, threshold,
+            maxBandFreq = maxBandFreq)) { kept =>
+        Dedup.jaccardVerify(kept,
           Dedup.minhashCandidates(kept, nsw, nh, bands, maxBandFreq),
           nsw, threshold)
-        Dedup.dedupByClusters(
-          b.join(broadcast(crossIds), Seq("doc_id"), "left_anti"),
-          within)
       }
-      if (appendSurvivors)
-        // the index-mutating step runs under the single-writer lease:
-        // a maintenance pass over this index mid-stream refuses (or is
-        // refused) instead of interleaving with the append
-        graft.operators.Lease.withLeases(spark, Seq(indexDir),
-          s"stream-append batch=$batchId") {
-          Dedup.writeMinhashIndex(
-            doc.join(survivors.select(col("doc_id")),
-              Seq("doc_id"), "left_semi"),
-            indexDir, numShingleWords = nsw, numHashes = nh,
-            bands = bands, bandBuckets = buckets, mode = "append")
-        }
-      sink(survivors, batchId)
-    } finally b.unpersist()
+    }
   }
 
   /** Streaming SUBSTRING-level cleaning against a persisted chunk
@@ -231,50 +319,27 @@ object StreamingAgg {
     */
   def cleanChunksStreamAgainstIndex(docs: DataFrame, indexDir: String,
       horizon: String = "1 hour", appendBatch: Boolean = true)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    docs
-      .withWatermark("ts", horizon)
-      .withColumn("fingerprint",
-        md5(graft.operators.Dedup.normalized(col("text"))))
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processChunkBatch(batch.drop("fingerprint"), indexDir,
-          appendBatch, batchId)(sink)
-      }
-  }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    bridge(docs, horizon, Some(textFingerprint)) { (batch, batchId) =>
+      processChunkBatch(batch, indexDir, appendBatch, batchId)(sink)
+    }
 
   /** How many committed batch stagings each bridge keeps under
     * `stream_out/`. Spark's foreachBatch replays at most the LAST
     * uncommitted micro-batch, so 1 would suffice under the documented
     * invariant — the window is kept wider so the invariant is belt
-    * AND suspenders: a replay of any of the last [[keptStagings]]
+    * AND suspenders: a replay of any of the last [[KeptStagings]]
     * batches re-emits its committed rows, and a replay from beyond
     * the window (or under a FRESH checkpoint whose batch ids restart)
     * refuses loudly instead of recomputing a wrong answer
     * (MultimodalStreamingSpec pins both sides of the window).
-    *
-    * The default (3) is deliberately above Spark's one-batch replay
-    * depth; the `spark.graft.stream.keptStagings` session conf widens
-    * (or narrows, to no less than 1) the window for deployments whose
-    * recovery tooling replays deeper — the refusal semantics are
-    * unchanged at any width. (Deliberately NOT derived from
+    * (Deliberately NOT derived from
     * `spark.sql.streaming.minBatchesToRetain`: that conf governs
     * checkpoint METADATA retention — default 100 — not replay depth,
     * and following it would silently retain 100 staged survivor sets
     * per index.)
     */
-  private val KeptStagingsDefault = 3L
-  private def keptStagings(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val k = spark.conf.getOption("spark.graft.stream.keptStagings")
-      .map(_.toLong).getOrElse(KeptStagingsDefault)
-    require(k >= 1,
-      s"spark.graft.stream.keptStagings must be >= 1, got $k")
-    k
-  }
+  private val KeptStagings = 3L
 
   /** Stage-once / replay-read commit shared by every index bridge's
     * `foreachBatch` body. The probe-stage answer of a micro-batch is
@@ -363,7 +428,7 @@ object StreamingAgg {
           "answer is unrecoverable, refusing to recompute it against " +
           "the mutated index (clear stream_out/ to start a new stream)")
       // prune stagings that fall out of the retention window
-      stagedIds.filter(_ <= batchId - keptStagings(spark)).foreach(id =>
+      stagedIds.filter(_ <= batchId - KeptStagings).foreach(id =>
         fs.delete(new Path(outRoot, s"batch_$id"), true))
       val stage = new Path(outRoot, s"_stage_batch_$batchId")
       if (fs.exists(stage)) fs.delete(stage, true)
@@ -402,57 +467,45 @@ object StreamingAgg {
   private[graft] def processChunkBatch(batch: DataFrame,
       indexDir: String, appendBatch: Boolean, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.Dedup
     val spark = batch.sparkSession
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val doc = b.select(col("doc_id"), col("text"))
-    def appendUnderStored(): Unit = {
-      // the STORED rule/granularity/buckets drive the append — the
-      // writer's params guard would refuse anything else. Cached per
-      // index WITHOUT the max_doc_id watermark (the one mutable
-      // field — the writer re-reads it itself for the monotone check)
-      val (rule, granularity, buckets) = cachedMeta(spark, "chunk", indexDir) {
-        val (r, g, b, _) = Dedup.readChunkIndexParams(spark, indexDir)
-        (r, g, b)
-      }
+    // the STORED rule/granularity/buckets drive the append — the
+    // writer's params guard would refuse anything else. Cached per
+    // index WITHOUT the max_doc_id watermark (the one mutable field —
+    // the writer re-reads it itself for the monotone check)
+    val (rule, granularity, buckets) = cachedMeta(spark, "chunk", indexDir) {
+      val (r, g, b, _) = Dedup.readChunkIndexParams(spark, indexDir)
+      (r, g, b)
+    }
+    def doc(b: DataFrame) = b.select(col("doc_id"), col("text"))
+    val append = Option.when(appendBatch) { (b: DataFrame, _: DataFrame) =>
       if (rule == "cdc")
-        Dedup.writeChunkIndexCDC(doc, indexDir, divisor = granularity,
+        Dedup.writeChunkIndexCDC(doc(b), indexDir, divisor = granularity,
           chunkBuckets = buckets, mode = "append")
       else if (rule == "line")
-        Dedup.writeChunkIndexLines(doc, indexDir,
+        Dedup.writeChunkIndexLines(doc(b), indexDir,
           chunkBuckets = buckets, mode = "append")
       else
-        Dedup.writeChunkIndex(doc, indexDir, chunkTokens = granularity,
+        Dedup.writeChunkIndex(doc(b), indexDir, chunkTokens = granularity,
           chunkBuckets = buckets, mode = "append")
     }
     // one output shape for BOTH paths: the sink always sees the
     // cleaned-text schema (audit columns included), so an empty
     // maintenance micro-batch cannot break a schema-dependent sink
-    def shaped(cleaned: DataFrame): DataFrame = b.drop("text")
+    def shaped(b: DataFrame, cleaned: DataFrame): DataFrame = b.drop("text")
       .join(cleaned.select(col("doc_id"), col("text"),
         col("n_chunks"), col("n_kept")), Seq("doc_id"))
-      .join(doc.select(col("doc_id"),
+      .join(doc(b).select(col("doc_id"),
         col("text").as("text_original")), Seq("doc_id"))
       .withColumn("text_original",
         when(col("n_kept") < col("n_chunks"), col("text_original")))
-    try if (b.isEmpty) {
-      // empty batch: skip the probe/append entirely (their ~dozen
-      // re-planned jobs are the fixed floor worth skipping), emit the
-      // shape over an empty cleaned frame; no marker needed — an
-      // empty replay recomputes the same empty answer
-      sink(shaped(spark.range(0).select(col("id").as("doc_id"),
+    // an empty batch's shape is over an empty cleaned frame; no marker
+    // needed — an empty replay recomputes the same empty answer
+    onTrigger(batch, batchId, sink, Some(Commit(indexDir, append)))(
+      b => shaped(b, spark.range(0).select(col("id").as("doc_id"),
         lit(null).cast("string").as("text"),
-        lit(0).as("n_chunks"), lit(0).as("n_kept"))), batchId)
-    } else {
-      val out = commitBatchOutput(spark, indexDir, batchId) {
-        shaped(Dedup.dedupChunksAgainstIndex(spark, doc, indexDir))
-      }
-      if (appendBatch)
-        graft.operators.Lease.withLeases(spark, Seq(indexDir),
-          s"stream-append batch=$batchId")(appendUnderStored())
-      sink(out, batchId)
-    } finally b.unpersist()
+        lit(0).as("n_chunks"), lit(0).as("n_kept")))) { (b, _) =>
+      shaped(b, Dedup.dedupChunksAgainstIndex(spark, doc(b), indexDir))
+    }
   }
 
   /** Streaming benchmark-DECONTAMINATION screen against a persisted
@@ -484,47 +537,35 @@ object StreamingAgg {
     */
   def screenStreamAgainstBenchmark(docs: DataFrame, benchDir: String,
       horizon: String = "1 hour")(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processScreenBatch(batch, benchDir, batchId)(sink)
-      }
+      : DataStreamWriter[Row] =
+    bridge(docs, horizon) { (batch, batchId) =>
+      processScreenBatch(batch, benchDir, batchId)(sink)
+    }
 
   /** [[screenStreamAgainstBenchmark]]'s per-micro-batch body, factored
-    * like its four siblings so the spec drives it directly. Stateless
-    * by design — see the bridge's scaladoc for why no commit marker or
-    * lease is needed here.
+    * out so the spec drives it directly. Stateless by design — see the
+    * bridge's scaladoc for why no commit marker or lease is needed.
     */
   private[graft] def processScreenBatch(batch: DataFrame,
       benchDir: String, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.Dedup
     val spark = batch.sparkSession
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) {
-      // empty maintenance batch: skip the probe's re-planned jobs
-      // (the fixed floor), keep the sink's schema — zero-shingle rows
-      // report (0, 0, 0.0) on every screen surface, so the literals
-      // ARE the screen of an empty batch
-      sink(b.withColumn("n_shingles", lit(0L))
+    // stored params through the per-JVM cache: immutable for the
+    // suite's life, and the cache key's params/ stamp invalidates on
+    // an offline suite append/swap
+    val params = cachedMeta(spark, "benchmark", benchDir)(
+      Dedup.readBenchmarkIndexParams(spark, benchDir))
+    // zero-shingle rows report (0, 0, 0.0) on every screen surface, so
+    // the literals ARE the screen of an empty batch
+    onTrigger(batch, batchId, sink)(
+      _.withColumn("n_shingles", lit(0L))
         .withColumn("n_contaminated", lit(0L))
-        .withColumn("contaminated_frac", lit(0.0)), batchId)
-    } else {
-      // stored params through the per-JVM cache: immutable for the
-      // suite's life, and the cache key's params/ stamp invalidates on
-      // an offline suite append/swap
-      val params = cachedMeta(spark, "benchmark", benchDir)(
-        Dedup.readBenchmarkIndexParams(spark, benchDir))
-      sink(b.join(
-        Dedup.contaminationScreenAgainstIndex(spark,
+        .withColumn("contaminated_frac", lit(0.0))) { (b, _) =>
+      b.join(Dedup.contaminationScreenAgainstIndex(spark,
           b.select(col("doc_id"), col("text")), benchDir,
           params = Some(params)),
-        Seq("doc_id")), batchId)
-    } finally b.unpersist()
+        Seq("doc_id"))
+    }
   }
 
   /** Streaming SEMANTIC (embedding-level) decontamination screen — the
@@ -558,25 +599,18 @@ object StreamingAgg {
     */
   def screenStreamSemantic(vecs: DataFrame, evalDir: String,
       threshold: Double = 0.9, horizon: String = "1 hour")(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    vecs
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSemanticScreenBatch(batch, evalDir, threshold, batchId)(
-          sink)
-      }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    bridge(vecs, horizon) { (batch, batchId) =>
+      processSemanticScreenBatch(batch, evalDir, threshold, batchId)(sink)
+    }
 
-  /** [[screenStreamSemantic]]'s per-micro-batch body, factored like its
-    * five siblings so the spec drives it directly. Stateless by design
-    * — see the bridge's scaladoc.
+  /** [[screenStreamSemantic]]'s per-micro-batch body, factored out so
+    * the spec drives it directly. Stateless by design — see the
+    * bridge's scaladoc.
     */
   private[graft] def processSemanticScreenBatch(batch: DataFrame,
       evalDir: String, threshold: Double, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.Dedup
     val spark = batch.sparkSession
     // the missing-dir refusal runs for EVERY batch, empty ones
     // included — a misspelled evalDir must surface on batch 0, not on
@@ -591,16 +625,12 @@ object StreamingAgg {
       s"screenStreamSemantic: eval dir $evalDir does not exist — " +
         "create it (empty is fine: rows screen unflagged until a " +
         "suite lands) or fix the path")
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) {
-      // empty maintenance batch: skip the screen's jobs, keep the
-      // sink's schema — the literals are what the screen reports for
-      // zero rows (and the null score matches the empty-eval-set rule)
-      sink(b.withColumn("max_cosine", lit(null).cast("double"))
+    // the literals are what the screen reports for zero rows (and the
+    // null score matches the empty-eval-set rule)
+    onTrigger(batch, batchId, sink)(
+      _.withColumn("max_cosine", lit(null).cast("double"))
         .withColumn("nearest_eval_id", lit(null).cast("long"))
-        .withColumn("contaminated", lit(false)), batchId)
-    } else {
+        .withColumn("contaminated", lit(false))) { (b, _) =>
       val hasFiles = fs.listStatus(evalPath).exists { s =>
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
@@ -616,11 +646,10 @@ object StreamingAgg {
             org.apache.spark.sql.types.StructField("embedding",
               org.apache.spark.sql.types.ArrayType(
                 org.apache.spark.sql.types.FloatType)))))
-      sink(b.join(
-        Dedup.semanticContaminationScreen(
+      b.join(Dedup.semanticContaminationScreen(
           b.select(col("vec_id"), col("embedding")), ev, threshold),
-        Seq("vec_id")), batchId)
-    } finally b.unpersist()
+        Seq("vec_id"))
+    }
   }
 
   /** Streaming QUALITY scoring — the seventh bridge, probe-only like
@@ -649,37 +678,26 @@ object StreamingAgg {
     */
   def scoreStreamQuality(docs: DataFrame, modelDir: String,
       horizon: String = "1 hour")(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processQualityScoreBatch(batch, modelDir, batchId)(sink)
-      }
+      : DataStreamWriter[Row] =
+    bridge(docs, horizon) { (batch, batchId) =>
+      processQualityScoreBatch(batch, modelDir, batchId)(sink)
+    }
 
-  /** [[scoreStreamQuality]]'s per-micro-batch body, factored like its
-    * six siblings so the spec drives it directly. */
+  /** [[scoreStreamQuality]]'s per-micro-batch body, factored out so
+    * the spec drives it directly. */
   private[graft] def processQualityScoreBatch(batch: DataFrame,
       modelDir: String, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
     import graft.operators.QualityClassifier
-    val spark = batch.sparkSession
-    // validate the model BEFORE touching the batch — readModel refuses
-    // a missing or params-less (crashed-write) dir loudly
-    val (weights, bias) = QualityClassifier.readModel(spark, modelDir)
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) {
-      // empty maintenance batch: keep the sink's schema, skip the jobs
-      sink(b.withColumn("quality_prob", lit(null).cast("double")),
-        batchId)
-    } else {
-      sink(b.join(
-        QualityClassifier.score(b.select(col("doc_id"), col("text")),
+    // readModel refuses a missing or params-less (crashed-write) dir
+    val (weights, bias) =
+      QualityClassifier.readModel(batch.sparkSession, modelDir)
+    onTrigger(batch, batchId, sink)(
+      _.withColumn("quality_prob", lit(null).cast("double"))) { (b, _) =>
+      b.join(QualityClassifier.score(b.select(col("doc_id"), col("text")),
           weights, bias),
-        Seq("doc_id")), batchId)
-    } finally b.unpersist()
+        Seq("doc_id"))
+    }
   }
 
   /** Streaming DSIR scoring — the eighth bridge, the
@@ -700,34 +718,26 @@ object StreamingAgg {
     */
   def scoreStreamDsir(docs: DataFrame, modelDir: String,
       horizon: String = "1 hour")(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDsirScoreBatch(batch, modelDir, batchId)(sink)
-      }
+      : DataStreamWriter[Row] =
+    bridge(docs, horizon) { (batch, batchId) =>
+      processDsirScoreBatch(batch, modelDir, batchId)(sink)
+    }
 
-  /** [[scoreStreamDsir]]'s per-micro-batch body, factored like its
-    * seven siblings so the spec drives it directly. */
+  /** [[scoreStreamDsir]]'s per-micro-batch body, factored out so the
+    * spec drives it directly. */
   private[graft] def processDsirScoreBatch(batch: DataFrame,
       modelDir: String, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
     import graft.operators.Sharding
-    val spark = batch.sparkSession
-    val (weights, buckets) = Sharding.readDsirModel(spark, modelDir)
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) {
-      sink(b.withColumn("n_ngrams", lit(null).cast("long"))
-        .withColumn("log_weight", lit(null).cast("double")), batchId)
-    } else {
-      sink(b.join(
-        Sharding.dsirScore(b.select(col("doc_id"), col("text")),
+    val (weights, buckets) =
+      Sharding.readDsirModel(batch.sparkSession, modelDir)
+    onTrigger(batch, batchId, sink)(
+      _.withColumn("n_ngrams", lit(null).cast("long"))
+        .withColumn("log_weight", lit(null).cast("double"))) { (b, _) =>
+      b.join(Sharding.dsirScore(b.select(col("doc_id"), col("text")),
           weights, buckets),
-        Seq("doc_id")), batchId)
-    } finally b.unpersist()
+        Seq("doc_id"))
+    }
   }
 
   /** Streaming TOKENIZE-at-ingest — the tenth bridge, the
@@ -755,34 +765,24 @@ object StreamingAgg {
     */
   def encodeStreamIds(docs: DataFrame, modelDir: String,
       horizon: String = "1 hour")(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processEncodeIdsBatch(batch, modelDir, batchId)(sink)
-      }
+      : DataStreamWriter[Row] =
+    bridge(docs, horizon) { (batch, batchId) =>
+      processEncodeIdsBatch(batch, modelDir, batchId)(sink)
+    }
 
-  /** [[encodeStreamIds]]' per-micro-batch body, factored like its
-    * eight siblings so the spec drives it directly. */
+  /** [[encodeStreamIds]]' per-micro-batch body, factored out so the
+    * spec drives it directly. */
   private[graft] def processEncodeIdsBatch(batch: DataFrame,
       modelDir: String, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
     import graft.operators.Bpe
-    val spark = batch.sparkSession
-    // validate the model BEFORE touching the batch — readFullModel
-    // refuses missing/crashed/legacy/drifted dirs loudly
-    val model = Bpe.readFullModel(spark, modelDir)
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) {
-      // empty maintenance batch: keep the sink's schema, skip the jobs
-      sink(b.withColumn("ids", lit(null).cast("array<int>"))
-        .withColumn("n_ids", lit(null).cast("int")), batchId)
-    } else {
-      sink(Bpe.encodeIds(b, model), batchId)
-    } finally b.unpersist()
+    // readFullModel refuses missing/crashed/legacy/drifted dirs
+    val model = Bpe.readFullModel(batch.sparkSession, modelDir)
+    onTrigger(batch, batchId, sink)(
+      _.withColumn("ids", lit(null).cast("array<int>"))
+        .withColumn("n_ids", lit(null).cast("int"))) { (b, _) =>
+      Bpe.encodeIds(b, model)
+    }
   }
 
   /** Streaming RETRIEVAL — the ninth bridge: each micro-batch is a
@@ -833,18 +833,14 @@ object StreamingAgg {
       k1: Double = 1.2, b: Double = 0.75, c: Int = 60,
       excludeSelf: Boolean = false, nprobe: Int = 4,
       horizon: String = "1 hour")(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries
-      .withWatermark("ts", horizon)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processRetrieveBatch(batch, bm25Dir, ivfDir, k, kEach, k1, b,
-          c, excludeSelf, nprobe, batchId)(sink)
-      }
+      : DataStreamWriter[Row] =
+    bridge(queries, horizon) { (batch, batchId) =>
+      processRetrieveBatch(batch, bm25Dir, ivfDir, k, kEach, k1, b,
+        c, excludeSelf, nprobe, batchId)(sink)
+    }
 
-  /** [[retrieveStream]]'s per-micro-batch body, factored like its
-    * nine siblings so the spec drives it directly. */
+  /** [[retrieveStream]]'s per-micro-batch body, factored out so the
+    * spec drives it directly. */
   private[graft] def processRetrieveBatch(batch: DataFrame,
       bm25Dir: String, ivfDir: Option[String], k: Int, kEach: Int,
       k1: Double, bParam: Double, c: Int, excludeSelf: Boolean,
@@ -863,14 +859,11 @@ object StreamingAgg {
     Retrieval.readBm25IndexParams(spark, bm25Dir)
     ivfDir.foreach(d => Similarity.readIvfIndexParams(spark, d))
     val scoreName = if (ivfDir.isDefined) "rrf" else "score"
-    val qb = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (qb.isEmpty) {
-      // empty maintenance batch: keep the OUTPUT schema (the top-k
-      // frame's, not the input's — this bridge reshapes), skip the
-      // probe jobs
-      sink(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+    // an empty batch sinks the OUTPUT schema (the top-k frame's, not
+    // the input's — this bridge reshapes)
+    onTrigger(batch, batchId, sink)(
+      qb => spark.createDataFrame(
+        java.util.Collections.emptyList[Row](),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("query_id",
             qb.schema("query_id").dataType),
@@ -879,13 +872,12 @@ object StreamingAgg {
           org.apache.spark.sql.types.StructField(scoreName,
             org.apache.spark.sql.types.DoubleType),
           org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.IntegerType)))), batchId)
-    } else {
+            org.apache.spark.sql.types.IntegerType))))) { (qb, _) =>
       val qd = qb.select(col("query_id"), col("text"))
       val lex = Retrieval.bm25TopKIndexed(spark, qd, bm25Dir,
         k = ivfDir.fold(k)(_ => kEach), k1 = k1, b = bParam,
         excludeSelf = excludeSelf)
-      sink(ivfDir match {
+      ivfDir match {
         case None => lex
         case Some(iv) =>
           // excludeSelf declares the QUERY ID SPACE, and applies to
@@ -906,8 +898,8 @@ object StreamingAgg {
           Retrieval.rrfFuse(
             lex.select(col("query_id"), col("doc_id"), col("rank")),
             sem, k, c)
-      }, batchId)
-    } finally qb.unpersist()
+      }
+    }
   }
 
   /** Streaming incremental PERCEPTUAL dedup against a persisted image
@@ -951,78 +943,48 @@ object StreamingAgg {
     */
   def dedupMediaStreamAgainstIndex(media: DataFrame, indexDir: String,
       horizon: String = "1 hour", appendSurvivors: Boolean = true)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    import graft.operators.{Barriers, Dedup, Multimodal}
-    media
-      .withWatermark("ts", horizon)
-      .withColumn("fingerprint", md5(col("payload")))
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processMediaBatch(batch.drop("fingerprint"), indexDir,
-          appendSurvivors, batchId)(sink)
-      }
-  }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    bridge(media, horizon, Some(md5(col("payload")))) { (batch, batchId) =>
+      processMediaBatch(batch, indexDir, appendSurvivors, batchId)(sink)
+    }
 
-  /** [[dedupMediaStreamAgainstIndex]]'s per-micro-batch body —
-    * factored like [[processChunkBatch]]; replay contract via
-    * [[commitBatchOutput]]. On the normal path the barrier'd
-    * signatures feed probe, within-batch candidates, AND append (one
-    * decode per row); on a replay only the SURVIVORS are re-decoded
-    * for the append retry — the probe is never re-run against an
-    * index the original run already extended.
+  /** [[dedupMediaStreamAgainstIndex]]'s per-micro-batch body, factored
+    * out so the replay contract is spec-provable. On the normal path
+    * the materialized signatures feed probe, within-batch candidates,
+    * AND append (one decode per row); on a replay only the SURVIVORS
+    * are re-decoded for the append retry — the probe is never re-run
+    * against an index the original run already extended.
     */
   private[graft] def processMediaBatch(batch: DataFrame,
       indexDir: String, appendSurvivors: Boolean, batchId: Long)(
       sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.{Barriers, Dedup, Multimodal}
+    import graft.operators.Multimodal
     val spark = batch.sparkSession
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) sink(b, batchId) else {
-      val (radius, buckets) = cachedMeta(spark, "hamming", indexDir)(
-        Dedup.readHammingIndexParams(spark, indexDir))
-      // decode + dHash ONCE per batch row (barrier'd, lazily built:
-      // the replay path never needs the whole batch's signatures)
-      var sigsOpt: Option[DataFrame] = None
-      val survivors = commitBatchOutput(spark, indexDir, batchId) {
-        val sigs = Barriers.barrier(Multimodal.imageSignatures(
-          b.select(col("media_id"), col("payload"))))
-        sigsOpt = Some(sigs)
-        val cross = Dedup.hammingCandidatesAgainstIndex(spark, sigs,
-          indexDir)
-        // every cross pair names exactly one batch id — semi-joining
-        // the batch against the pair ids drops precisely those
-        val crossIds = cross.select(col("id_a").as("media_id"))
-          .unionByName(cross.select(col("id_b").as("media_id")))
-          .distinct()
-        val keptSigs = sigs
-          .join(broadcast(crossIds), Seq("media_id"), "left_anti")
-        Dedup.dedupByClusters(
-          b.join(broadcast(crossIds), Seq("media_id"), "left_anti"),
-          Dedup.hammingCandidates(keptSigs, radius),
-          idCol = "media_id")
-      }
-      if (appendSurvivors) {
+    val (radius, buckets) = cachedMeta(spark, "hamming", indexDir)(
+      Dedup.readHammingIndexParams(spark, indexDir))
+    def media(b: DataFrame) = b.select(col("media_id"), col("payload"))
+    // set by the probe; the replay path never needs the whole batch's
+    // signatures
+    var sigsOpt: Option[DataFrame] = None
+    val append = Option.when(appendSurvivors) {
+      (b: DataFrame, survivors: DataFrame) =>
+        val ids = survivors.select(col("media_id"))
         val survSigs = sigsOpt match {
-          case Some(sigs) => sigs.join(
-            survivors.select(col("media_id")), Seq("media_id"),
-            "left_semi")
-          case None => Multimodal.imageSignatures( // replay: survivors only
-            b.select(col("media_id"), col("payload"))
-              .join(survivors.select(col("media_id")), Seq("media_id"),
-                "left_semi"))
+          case Some(sigs) => sigs.join(ids, Seq("media_id"), "left_semi")
+          case None => Multimodal.imageSignatures(
+            media(b).join(ids, Seq("media_id"), "left_semi"))
         }
-        graft.operators.Lease.withLeases(spark, Seq(indexDir),
-          s"stream-append batch=$batchId") {
-          Dedup.writeHammingIndex(survSigs, indexDir,
-            maxHamming = radius, pieceBuckets = buckets, mode = "append")
-        }
-      }
-      sink(survivors, batchId)
-    } finally b.unpersist()
+        Dedup.writeHammingIndex(survSigs, indexDir,
+          maxHamming = radius, pieceBuckets = buckets, mode = "append")
+    }
+    onTrigger(batch, batchId, sink, Some(Commit(indexDir, append)))(
+        identity) { (b, held) =>
+      val sigs = held(Multimodal.imageSignatures(media(b)))
+      sigsOpt = Some(sigs)
+      dropCrossThenCluster(b, sigs, "media_id", held,
+        Dedup.hammingCandidatesAgainstIndex(spark, sigs, indexDir))(
+        Dedup.hammingCandidates(_, radius))
+    }
   }
 
   /** Streaming incremental SEMANTIC dedup against a persisted IVF index
@@ -1073,73 +1035,50 @@ object StreamingAgg {
   def dedupEmbeddingsStreamAgainstIndex(vecs: DataFrame, indexDir: String,
       horizon: String = "1 hour", threshold: Double = 0.95,
       appendSurvivors: Boolean = true)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    import graft.operators.{Dedup, Similarity}
-    vecs
-      .withWatermark("ts", horizon)
-      // xxhash64 takes the float array directly (no lossy string cast);
-      // a 64-bit collision admits one extra row into the semantic
-      // stages, which re-score it anyway — never a wrong drop
-      .withColumn("fingerprint", xxhash64(col("embedding")))
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processEmbeddingBatch(batch.drop("fingerprint"), indexDir,
-          threshold, appendSurvivors, batchId)(sink)
-      }
-  }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    // xxhash64 takes the float array directly (no lossy string cast);
+    // a 64-bit collision admits one extra row into the semantic
+    // stages, which re-score it anyway — never a wrong drop
+    bridge(vecs, horizon, Some(xxhash64(col("embedding")))) {
+      (batch, batchId) =>
+        processEmbeddingBatch(batch, indexDir, threshold,
+          appendSurvivors, batchId)(sink)
+    }
 
-  /** [[dedupEmbeddingsStreamAgainstIndex]]'s per-micro-batch body —
-    * factored like [[processChunkBatch]]; replay contract via
-    * [[commitBatchOutput]], append input re-derived from the committed
-    * survivor ids so the retry is the IVF family's documented
-    * idempotent duplicate-row one.
+  /** [[dedupEmbeddingsStreamAgainstIndex]]'s per-micro-batch body,
+    * factored out so the replay contract is spec-provable; the append
+    * input is re-derived from the committed survivor ids so the retry
+    * is the IVF family's documented idempotent duplicate-row one.
     */
   private[graft] def processEmbeddingBatch(batch: DataFrame,
       indexDir: String, threshold: Double, appendSurvivors: Boolean,
       batchId: Long)(sink: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.Dedup
     import graft.operators.Similarity
     val spark = batch.sparkSession
-    val b = batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (b.isEmpty) sink(b, batchId) else {
-      val vec = b.select(col("vec_id"), col("embedding"))
-      val survivors = commitBatchOutput(spark, indexDir, batchId) {
-        // stored geometry drives BOTH passes (cross probe reads it
-        // itself; the within-batch pass gets the same arrays) so the
-        // two scorers cannot disagree on cell assignment — cached per
-        // index, frozen for the index's life (rebuilds are offline)
-        val cents = cachedMeta(spark, "ivf-centroids", indexDir)(
-          Similarity.readIvfCentroids(spark, indexDir))
-        val (multiAssign, quantizer) = cachedMeta(spark, "ivf-params", indexDir)(
-          Similarity.readIvfIndexParams(spark, indexDir))
-        val cross = Dedup.semanticNearDupAgainstIndex(spark, vec,
-          indexDir, threshold)
-        // every cross pair names exactly one batch id — semi-joining
-        // the batch against the pair ids drops precisely those
-        val crossIds = cross.select(col("id_a").as("vec_id"))
-          .unionByName(cross.select(col("id_b").as("vec_id")))
-          .distinct()
-        val kept = vec
-          .join(broadcast(crossIds), Seq("vec_id"), "left_anti")
-        val within = Dedup.semanticNearDupPairsWith(kept, cents,
-          threshold, multiAssign, quantizer)
-        Dedup.dedupByClusters(
-          b.join(broadcast(crossIds), Seq("vec_id"), "left_anti"),
-          within, idCol = "vec_id")
+    // stored geometry drives BOTH passes (cross probe reads it itself;
+    // the within-batch pass gets the same arrays) so the two scorers
+    // cannot disagree on cell assignment — cached per index, frozen
+    // for the index's life (rebuilds are offline)
+    val cents = cachedMeta(spark, "ivf-centroids", indexDir)(
+      Similarity.readIvfCentroids(spark, indexDir))
+    val (multiAssign, quantizer) = cachedMeta(spark, "ivf-params", indexDir)(
+      Similarity.readIvfIndexParams(spark, indexDir))
+    def vec(b: DataFrame) = b.select(col("vec_id"), col("embedding"))
+    val append = Option.when(appendSurvivors) {
+      (b: DataFrame, survivors: DataFrame) =>
+        Similarity.appendIvfIndex(
+          vec(b).join(survivors.select(col("vec_id")),
+            Seq("vec_id"), "left_semi"),
+          indexDir)
+    }
+    onTrigger(batch, batchId, sink, Some(Commit(indexDir, append)))(
+        identity) { (b, held) =>
+      dropCrossThenCluster(b, vec(b), "vec_id", held,
+          Dedup.semanticNearDupAgainstIndex(spark, vec(b), indexDir,
+            threshold)) {
+        Dedup.semanticNearDupPairsWith(_, cents, threshold, multiAssign,
+          quantizer)
       }
-      if (appendSurvivors)
-        graft.operators.Lease.withLeases(spark, Seq(indexDir),
-          s"stream-append batch=$batchId") {
-          Similarity.appendIvfIndex(
-            vec.join(survivors.select(col("vec_id")),
-              Seq("vec_id"), "left_semi"),
-            indexDir)
-        }
-      sink(survivors, batchId)
-    } finally b.unpersist()
+    }
   }
 }

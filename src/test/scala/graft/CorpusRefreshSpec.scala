@@ -713,6 +713,25 @@ class CorpusRefreshSpec extends SparkSuite {
       Bpe.mergesDigest(merges))
   }
 
+  test("a passed tokenizerModel that is not the dir's stored model " +
+      "refuses BEFORE any mutation") {
+    import graft.operators.Bpe
+    val modelDir = tmp("tokpass_model")
+    val merges = Seq(("e", "s"), ("es", "t"))
+    Bpe.writeModel(spark, Bpe.BpeModel(Seq("e", "s", "t", "</w>"), merges),
+      modelDir)
+    // same merges, one more alphabet symbol: a different id space
+    val other = Bpe.BpeModel(Seq("e", "s", "t", "w", "</w>"), merges)
+    val fresh = tmp("tokpass_corpus")
+    val e = intercept[IllegalArgumentException](
+      Pipeline.refreshCorpus(spark,
+        Seq((0L, "newest a0 b0", "en")).toDF("doc_id", "text", "lang"),
+        tmp("tokpass_idx"), fresh, tokenizerModelDir = Some(modelDir),
+        tokenizerModel = Some(other)))
+    assert(e.getMessage.contains("model_digest"), e.getMessage)
+    assert(new java.io.File(fresh).list().isEmpty)
+  }
+
   test("refresh shards=<dir> folds the published batch into the " +
       "standing export knob-inertly; missing tokenizer and missing " +
       "bootstrap refuse") {

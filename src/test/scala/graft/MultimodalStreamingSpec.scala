@@ -156,33 +156,91 @@ class MultimodalStreamingSpec extends SparkSuite {
       Seq((1L, textA)).toDF("doc_id", "text"), idxDir,
       numHashes = 8, bands = 4, bandBuckets = 8)
 
+    // the per-trigger budget: a micro-batch is computed once. The
+    // batch reaches foreachBatch as an RDD whose lineage runs the
+    // fingerprint stage's stateful dedup (no physical plan downstream
+    // names that operator), so the listener counts what the operator
+    // does instead: each recomputation of the batch re-applies its
+    // rows to the state store, and a batch computed once updates the
+    // state once per distinct fingerprint fed. Plus a cap on the
+    // stream's jobs.
+    val stateUpdates = new java.util.concurrent.atomic.AtomicLong()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables
+          .filter(_.name.contains("number of updated state rows"))
+          .foreach(a => stateUpdates.addAndGet(
+            a.update.fold(0L)(_.toString.toLong)))
+    }
     val input = MemoryStream[(java.sql.Timestamp, Long, String)]
     val docs = input.toDF().toDF("ts", "doc_id", "text")
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = StreamingAgg.dedupDocumentsStreamAgainstIndex(docs, idxDir,
-        "1 hour", threshold = 0.5) { (survivors, _) =>
-        got ++= survivors.select($"doc_id").collect().map(_.getLong(0))
+    // the RDD ids of each trigger's materialized batch, seen from the
+    // sink while the trigger runs
+    val batchRdds = scala.collection.mutable.Map.empty[Long, Set[Int]]
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = StreamingAgg.dedupDocumentsStreamAgainstIndex(docs, idxDir,
+          "1 hour", threshold = 0.5) { (survivors, id) =>
+          batchRdds(id) = spark.sparkContext.getPersistentRDDs
+            .collect { case (rid, r) if r.name == s"stream batch $id" => rid }
+            .toSet
+          got ++= survivors.select($"doc_id").collect().map(_.getLong(0))
+        }
+        .option("checkpointLocation", s"$ckpt/ckpt")
+        .start()
+      def t(s: String) = java.sql.Timestamp.valueOf(s)
+      // batch 1: an EDITED copy of the indexed doc (not byte-equal, so
+      // the fingerprint stage cannot catch it) drops; novel C survives
+      input.addData(Seq(
+        (t("2024-01-01 10:00:00"), 10L, textA.replace("tonight", "today")),
+        (t("2024-01-01 10:00:01"), 11L, textC)))
+      q.processAllAvailable()
+      // batch 2: an edited copy of C — indexed only MID-STREAM by batch
+      // 1's append — drops; novel D survives
+      input.addData(Seq(
+        (t("2024-01-01 10:10:00"), 20L, textC.replace("machines", "hosts")),
+        (t("2024-01-01 10:10:01"), 21L, textD)))
+      q.processAllAvailable()
+      q.stop()
+      // events reach listeners in order: once a marker job's end is
+      // seen, every earlier event has been
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val marker = new org.apache.spark.scheduler.SparkListener {
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          drained.countDown()
       }
-      .option("checkpointLocation", s"$ckpt/ckpt")
-      .start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: an EDITED copy of the indexed doc (not byte-equal, so
-    // the fingerprint stage cannot catch it) drops; novel C survives
-    input.addData(Seq(
-      (t("2024-01-01 10:00:00"), 10L, textA.replace("tonight", "today")),
-      (t("2024-01-01 10:00:01"), 11L, textC)))
-    q.processAllAvailable()
-    // batch 2: an edited copy of C — indexed only MID-STREAM by batch
-    // 1's append — drops; novel D survives
-    input.addData(Seq(
-      (t("2024-01-01 10:10:00"), 20L, textC.replace("machines", "hosts")),
-      (t("2024-01-01 10:10:01"), 21L, textD)))
-    q.processAllAvailable()
-    q.stop()
+      spark.sparkContext.addSparkListener(marker)
+      try {
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.sparkContext.removeSparkListener(marker)
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(got.toSet === Set(11L, 21L))
     assert(spark.read.parquet(s"$idxDir/shingles")
       .select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
       === Set(1L, 11L, 21L))
+    val triggers = batchRdds.size
+    info(s"$triggers triggers, ${stateUpdates.get} state-row updates, " +
+      s"${jobs.get} jobs")
+    assert(triggers >= 2)
+    // four rows fed, four distinct fingerprints
+    assert(stateUpdates.get === 4L,
+      s"${stateUpdates.get} state-row updates for 4 rows: a micro-batch " +
+        "was recomputed")
+    assert(jobs.get <= 160, s"${jobs.get} jobs")
+    // each trigger held its batch's blocks while it ran and released
+    // them when it ended
+    assert(batchRdds.values.forall(_.nonEmpty), batchRdds.toString)
+    val live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(batchRdds.values.flatten.forall(r => !live.contains(r)),
+      s"blocks still held: ${batchRdds.filter(_._2.exists(live))}")
   }
 
   test("streaming chunk cleaning: INDEXED boilerplate is stripped " +
@@ -574,39 +632,6 @@ class MultimodalStreamingSpec extends SparkSuite {
         e.getMessage.contains("query-B"))
       assert(got.size === 2) // nothing emitted for stream B
     } finally spark.sparkContext.setLocalProperty(key, null)
-  }
-
-  test("retention window follows spark.graft.stream.keptStagings: a " +
-      "wider window retains stagings the default would have pruned") {
-    val textA = "the quick brown fox jumps over the lazy dog and then " +
-      "runs far away into the deep dark forest tonight"
-    def doc(i: Long) = s"wholly distinct micro batch document number " +
-      s"$i about topic $i with unique vocabulary item$i and token$i"
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_keptknob").toString
-    graft.operators.Dedup.writeMinhashIndex(
-      Seq((1L, textA)).toDF("doc_id", "text"), idxDir,
-      numHashes = 8, bands = 4, bandBuckets = 8)
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    def run(id: Long): Unit = StreamingAgg.processTextBatch(
-      Seq((t("2024-01-01 10:00:00"), 100L + id, doc(id)))
-        .toDF("ts", "doc_id", "text"),
-      idxDir, threshold = 0.5, appendSurvivors = true, batchId = id) {
-      (_, _) => ()
-    }
-    try {
-      spark.conf.set("spark.graft.stream.keptStagings", "6")
-      (0L to 5L).foreach(run)
-      // at the default window (3) batch_0 would be gone after batch 3
-      assert(new java.io.File(s"$idxDir/stream_out/batch_0/_COMMIT")
-        .exists())
-      // narrowing back prunes on the next batch, refusal side intact
-      spark.conf.unset("spark.graft.stream.keptStagings")
-      run(6L)
-      assert(!new java.io.File(s"$idxDir/stream_out/batch_0").exists())
-      val e = intercept[IllegalArgumentException] { run(0L) }
-      assert(e.getMessage.contains("stream_out"))
-    } finally spark.conf.unset("spark.graft.stream.keptStagings")
   }
 
   test("streaming benchmark screen: an INDEXED eval n-gram flags a " +
