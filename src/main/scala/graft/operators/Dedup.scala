@@ -1393,10 +1393,10 @@ object Dedup {
     * `spark.graft.durableBarriers` — see [[Barriers]]).
     */
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    val edges = pairs.select(col("id_a"), col("id_b"))
+    // materialized once, so no round re-runs a caller's lazy pair scoring
+    val edges = Barriers.barrier(pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b"), col("id_a")))
-      .toDF("src", "dst")
-      .persist()
+      .toDF("src", "dst"))
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     var iter = 0
@@ -1420,7 +1420,6 @@ object Dedup {
       labels = updated.select(col("id"), col("label"))
       iter += 1
     }
-    edges.unpersist()
     labels.withColumnRenamed("label", "canonical_id")
   }
 
